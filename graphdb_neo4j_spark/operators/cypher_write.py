@@ -63,6 +63,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from graphdb_neo4j_spark.operators.order import materialize
+
 __all__ = ["GraphStore", "GraphWriter", "CypherWriteError"]
 
 
@@ -511,9 +513,9 @@ class GraphStore:
         on long pipelines; on a real cluster prefer ``save`` to a
         parquet stage for fault tolerance)."""
         for label, df in self.nodes.items():
-            self.nodes[label] = df.localCheckpoint(eager=True)
+            self.nodes[label], _ = materialize(df)
         for rel, df in self.edges.items():
-            self.edges[rel] = df.localCheckpoint(eager=True)
+            self.edges[rel], _ = materialize(df)
 
     def save(self, path: str) -> None:
         """Parquet layout mirroring `PropertyGraph.save`: per-label node

@@ -1231,7 +1231,7 @@ def hamming_neardup_pairs(
     (band, slice); verification is JVM-side ``bit_count(a ^ b)``.
     The exploded frame is read twice by the self-join, so it is
     frozen via :func:`~graphdb_neo4j_spark.operators.order.
-    checkpoint_eager`; call ``handle.release()`` after the final
+    materialize`; call ``handle.release()`` after the final
     consuming action (the repo's materializing-operator contract —
     ADVICE r9 retired the bare ``persist()`` that accumulated cache
     entries across DISTINCT inputs in long sessions).
@@ -1240,11 +1240,11 @@ def hamming_neardup_pairs(
         max_hamming = bands - 1
     stacked = _band_entries(hashes, id_col, hash_col, bands)
     stacked = _cap_buckets(stacked, bucket_cap)
-    from graphdb_neo4j_spark.operators.order import checkpoint_eager
+    from graphdb_neo4j_spark.operators.order import materialize
 
     # frozen, not persist()-ed: read twice by the self-join, and the
     # handle gives callers deterministic block release (ADVICE r9)
-    stacked, handle = checkpoint_eager(stacked)
+    stacked, handle = materialize(stacked)
     a = stacked.alias("a")
     b = stacked.alias("b")
     cand = (

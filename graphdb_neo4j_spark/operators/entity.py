@@ -131,7 +131,7 @@ def candidate_pairs(
     ``pairs_df`` is ``(id_a, id_b, dist)`` with id_a < id_b and
     ``handle`` is the CheckpointHandle owning the materialized blocks —
     call ``handle.release()`` after the final action on ``pairs_df``
-    (the same explicit-handle contract as order.checkpoint_eager and
+    (the same explicit-handle contract as order.materialize and
     order.prefix_sum_distributed; ADVICE r5 replaced the previous
     dynamic ``checkpoint_handle`` attribute, which any transformation
     silently dropped).
@@ -186,9 +186,9 @@ def candidate_pairs(
         .dropDuplicates(["id_a", "id_b"])
         .select("id_a", "id_b", "dist")
     )
-    from graphdb_neo4j_spark.operators.order import checkpoint_eager
+    from graphdb_neo4j_spark.operators.order import materialize
 
-    out, handle = checkpoint_eager(verified)
+    out, handle = materialize(verified)
     proj.unpersist()
     return out, handle
 

@@ -9,36 +9,56 @@ int per partition crosses the driver, never data).
 
 from __future__ import annotations
 
+import os
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 
+class MaterializeError(RuntimeError):
+    """A freeze whose analyzed plan is not the ``LogicalRDD`` over the
+    frozen RDD — the handle could not name the blocks it must release."""
+
+
 class CheckpointHandle:
-    """Deterministic releaser for a ``localCheckpoint``-ed DataFrame.
+    """Deterministic releaser for a :func:`materialize`-d DataFrame.
 
     ``DataFrame.unpersist()`` does NOT free localCheckpoint blocks (it
     only touches the SQL CacheManager), and ContextCleaner frees them
     only after a JVM GC notices the dropped reference — so long-lived
     sessions that loop over checkpointing operators accumulate blocks.
-    This handle records the RDD ids the checkpoint created and releases
-    exactly those via ``SparkContext.getPersistentRDDs``.
+    This handle records the RDD id the checkpoint created and releases
+    exactly that one via ``SparkContext.getPersistentRDDs`` (a reliable
+    checkpoint is not in that set, so its release is a no-op: the
+    session owns its files); a ``layout`` handle unpersists its cache.
 
-    After ``release()`` the checkpointed DataFrame is UNUSABLE — any
+    After ``release()`` a checkpointed DataFrame is UNUSABLE — any
     further action fails loudly with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND
     (the fail-loud contract: never silently recompute a plan whose
     partitioning was sampled).  Call it only after the final consuming
     action has run.
     """
 
-    def __init__(self, spark: SparkSession, rdd_ids: frozenset[int]):
+    def __init__(
+        self,
+        spark: SparkSession,
+        rdd_ids: frozenset[int] = frozenset(),
+        cached: DataFrame | None = None,
+    ):
         self._spark = spark
         self._rdd_ids = rdd_ids
+        self._cached = cached
         self._released = False
 
     def release(self) -> None:
         if self._released:
             return
         self._released = True
+        if self._cached is not None:
+            self._cached.unpersist()
+        if not self._rdd_ids:
+            return
         jsc = self._spark.sparkContext._jsc.sc()
         it = jsc.getPersistentRDDs().toList().iterator()
         while it.hasNext():
@@ -50,74 +70,79 @@ class CheckpointHandle:
     unpersist = release
 
 
-def checkpoint_eager(
-    df: DataFrame, reliable: bool | None = None
+def _ensure_checkpoint_dir(spark: SparkSession) -> None:
+    """Set a session checkpoint dir if none is configured (local runs:
+    a tempdir; on a cluster, configure a durable FS dir up front and
+    this is a no-op)."""
+    if spark.sparkContext._jsc.sc().getCheckpointDir().isEmpty():
+        spark.sparkContext.setCheckpointDir(
+            tempfile.mkdtemp(prefix="spark-graft-ckpt-")
+        )
+
+
+def materialize(
+    df: DataFrame, mode: str = "local", key: str | None = None
 ) -> tuple[DataFrame, CheckpointHandle]:
-    """``localCheckpoint(eager=True)`` plus a working release handle.
+    """Materialize ``df`` now and return ``(frame, handle)`` — the one
+    freeze policy of the package.
 
-    The checkpointed frame's analyzed plan is a ``LogicalRDD`` wrapping
-    EXACTLY the persisted RDD, so the handle captures that one id
-    directly — precise under CONCURRENT queries on the same session
-    (r10 review: the streaming sinks call this from ``foreachBatch``,
-    where another stream's checkpoint may materialize at any moment;
-    the previous persistent-set-delta capture could adopt — and later
-    force-release — a foreign query's blocks).  The delta capture
-    survives only as a fallback for a future Spark whose plan shape
-    changes, with its original no-concurrent-persist assumption.
-
-    RECOVERY CONTRACT (r11): ``localCheckpoint`` stores blocks on
-    executor-local storage — fast, but a lost executor (dynamic
-    allocation, preemption, hardware) makes the frozen blocks
-    unrecoverable MID-QUERY and the query fails.  On deployments where
-    that matters, pass ``reliable=True`` — or set
-    ``SPARK_GRAFT_RELIABLE_FREEZE=1`` to flip every call site at once
-    (q166's edge freeze, the curation pack stage, the Hamming-LSH
-    keeper ledgers) — and the freeze becomes an eager RELIABLE
-    ``Dataset.checkpoint`` to the configured checkpoint dir (set a
-    durable FS dir up front on a cluster; a session tempdir is created
-    locally).  Semantics are identical; the handle's ``release()`` is
-    then a no-op because checkpoint files are owned by the session
-    (``spark.cleaner.referenceTracking.cleanCheckpoints=true`` deletes
-    them once the RDD is GC'd).  Local default stays ``localCheckpoint``:
-    at local[n] there is no executor to lose, and the reliable write
-    costs a filesystem round-trip per freeze.
+    * ``local`` — eager ``localCheckpoint``: blocks on executor-local
+      storage, lineage truncated; the analyzed plan is a ``LogicalRDD``
+      wrapping EXACTLY the persisted RDD, so the handle captures that
+      one id — precise under CONCURRENT queries on the same session
+      (the streaming sinks freeze from ``foreachBatch``, where another
+      stream's checkpoint may materialize at any moment).
+    * ``reliable`` — eager ``Dataset.checkpoint`` to the session
+      checkpoint dir (a tempdir locally; set a durable FS dir up front
+      on a cluster).  Same semantics, but a lost executor cannot take
+      the frozen blocks with it MID-QUERY.  Louvain asks for it (see
+      the kernel); ``SPARK_GRAFT_RELIABLE_FREEZE=1`` upgrades every
+      ``local`` freeze in the package to it.  No persist precedes the
+      checkpoint: the eager write job computes the plan exactly once
+      (measured on Spark 4.1.2 — a Python UDF after a shuffle ran once
+      per row, in the same jobs and stages as ``local``; a persist
+      first ADDED a job), pinned by
+      ``test_materialize_reliable_evaluates_plan_once``.  Files are
+      owned by the session
+      (``spark.cleaner.referenceTracking.cleanCheckpoints=true``
+      deletes each once its RDD is GC'd), so ``release()`` frees
+      nothing.  Local default stays ``local``: at local[n] there is no
+      executor to lose, and the reliable write costs a filesystem
+      round-trip per freeze.
+    * ``layout`` — hash-partition on ``key``, sort within partitions,
+      persist and count: the discipline for a LOOP-INVARIANT table (an
+      iterative kernel's edge frame) that many per-round plans join on
+      ``key``.  Unlike a checkpoint, which scans as ``UnknownPartitioning``
+      and re-exchanges + re-sorts every round, ``InMemoryRelation``
+      keeps the child's partitioning and ordering visible to Catalyst
+      (swapping the Louvain edge frame to it measured median round exec
+      13.5s -> 6.2s at sf0.1, assignments bit-identical).  Cache ≠
+      freeze: lineage is retained, so per-round evolving state needs
+      ``local``/``reliable``.  ``release()`` unpersists it.
     """
-    if reliable is None:
-        import os
-
-        reliable = (
-            os.environ.get("SPARK_GRAFT_RELIABLE_FREEZE", "0") == "1"
+    spark = df.sparkSession
+    if mode == "layout":
+        if key is None:
+            raise ValueError("materialize(mode='layout') needs a key column")
+        n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        out = df.repartition(n_shuffle, key).sortWithinPartitions(key).persist()
+        out.count()
+        return out, CheckpointHandle(spark, cached=out)
+    if mode == "local" and os.environ.get("SPARK_GRAFT_RELIABLE_FREEZE") == "1":
+        mode = "reliable"
+    if mode == "local":
+        out = df.localCheckpoint(eager=True)
+    elif mode == "reliable":
+        _ensure_checkpoint_dir(spark)
+        out = df.checkpoint(eager=True)
+    else:
+        raise ValueError(f"unknown materialize mode {mode!r}")
+    node = out._jdf.queryExecution().analyzed()
+    if node.nodeName() != "LogicalRDD":
+        raise MaterializeError(
+            f"{mode} freeze planned as {node.nodeName()}, not LogicalRDD"
         )
-    if reliable:
-        from graphdb_neo4j_spark.operators.traversal import (
-            _ensure_checkpoint_dir,
-        )
-
-        _ensure_checkpoint_dir(df.sparkSession)
-        return df.checkpoint(eager=True), CheckpointHandle(
-            df.sparkSession, frozenset()
-        )
-    sc = df.sparkSession.sparkContext._jsc.sc()
-
-    def _ids() -> set[int]:
-        it = sc.getPersistentRDDs().keys().iterator()
-        out = set()
-        while it.hasNext():
-            out.add(it.next())
-        return out
-
-    before = _ids()
-    out = df.localCheckpoint(eager=True)
-    ids: frozenset[int] | None = None
-    try:
-        node = out._jdf.queryExecution().analyzed()
-        if node.nodeName() == "LogicalRDD":
-            ids = frozenset([node.rdd().id()])
-    except Exception:
-        ids = None
-    if ids is None:
-        ids = frozenset(_ids() - before)
-    return out, CheckpointHandle(df.sparkSession, ids)
+    return out, CheckpointHandle(spark, frozenset([node.rdd().id()]))
 
 
 def contiguous_index(
@@ -151,7 +176,7 @@ def contiguous_index(
     )
     handle = CheckpointHandle(spark, frozenset())
     if checkpoint:
-        keyed, handle = checkpoint_eager(keyed)
+        keyed, handle = materialize(keyed)
     counts = dict(
         (r["__pid"], r["n"])
         for r in keyed.groupBy("__pid").agg(F.count("*").alias("n")).collect()
@@ -214,7 +239,7 @@ def group_contiguous_index(
     ).withColumn("__pid", F.spark_partition_id())
     handle = CheckpointHandle(spark, frozenset())
     if checkpoint:
-        keyed, handle = checkpoint_eager(keyed)
+        keyed, handle = materialize(keyed)
     counts = keyed.groupBy("__pid", *group_cols).agg(
         F.count("*").alias("__n")
     )
@@ -263,7 +288,7 @@ def ntile_distributed(
     Returns ``(out_df, handle)``: the frame is backed by the
     contiguous-index checkpoint and ``handle.release()`` must run
     after the final consuming action for deterministic block cleanup
-    (same explicit-handle contract as checkpoint_eager /
+    (same explicit-handle contract as materialize /
     prefix_sum_distributed; ADVICE r5 retired the dynamic
     ``checkpoint_handle`` attribute pattern, which any transformation
     silently dropped).
@@ -305,7 +330,7 @@ def prefix_sum_distributed(
     keyed = df.repartitionByRange(np, *order_cols).withColumn(
         "__pid", F.spark_partition_id()
     )
-    keyed, handle = checkpoint_eager(keyed)
+    keyed, handle = materialize(keyed)
     totals = dict(
         (r["__pid"], r["t"])
         for r in keyed.groupBy("__pid")
@@ -361,7 +386,7 @@ def group_prefix_sum_distributed(
     ).withColumn("__pid", F.spark_partition_id())
     handle = CheckpointHandle(spark, frozenset())
     if checkpoint:
-        keyed, handle = checkpoint_eager(keyed)
+        keyed, handle = materialize(keyed)
     totals = keyed.groupBy("__pid", *group_cols).agg(
         F.sum(value_col).alias("__t")
     )

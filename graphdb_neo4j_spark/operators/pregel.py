@@ -21,9 +21,10 @@ expressions / DataFrame transforms, so each superstep is the usual
 co-partitioned join + grouped aggregate (one shuffle pair), AQE
 coalesces as state shrinks, and nothing ever collects to the driver.
 
-Scale notes match traversal.py: ``localCheckpoint`` per superstep
-truncates the exploding plan lineage; on a real cluster prefer
-reliable ``checkpoint()`` for executor-loss tolerance.
+Scale notes match traversal.py: an ``order.materialize`` freeze per
+superstep truncates the exploding plan lineage; on a real cluster set
+``SPARK_GRAFT_RELIABLE_FREEZE=1`` so the freezes become reliable
+checkpoints that tolerate executor loss.
 """
 
 from __future__ import annotations
@@ -32,6 +33,8 @@ from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from graphdb_neo4j_spark.operators.order import materialize
 
 
 def triplets(vertices: DataFrame, edges: DataFrame) -> DataFrame:
@@ -108,7 +111,7 @@ def pregel(
     components or BFS levels; leave it off for float states like
     PageRank, where fixed iteration counts are the convention.
     """
-    cur = vertices.localCheckpoint()
+    cur, _ = materialize(vertices)
     for _ in range(max_iter):
         msgs = aggregate_messages(
             cur, edges, to_dst=to_dst, to_src=to_src, agg=agg
@@ -116,7 +119,7 @@ def pregel(
         nxt = update(cur.join(msgs, "key", "left"))
         if "msg" in nxt.columns:
             nxt = nxt.drop("msg")
-        nxt = nxt.localCheckpoint()
+        nxt, _ = materialize(nxt)
         if (
             stop_at_fixpoint
             and nxt.exceptAll(cur).isEmpty()

@@ -151,7 +151,7 @@ def pack_sequences(
     CheckpointHandle owning the range-partitioned intermediate —
     call ``handle.release()`` after the final consuming action, after
     which the frame is unusable by design (fail-loud contract; same
-    explicit-handle convention as order.checkpoint_eager.  ADVICE r5
+    explicit-handle convention as order.materialize, which
     replaced the previous dynamic ``checkpoint_handle`` attribute,
     which any transformation silently dropped).  Only the
     ``deskew_groups=False`` bounded-groups fast path returns

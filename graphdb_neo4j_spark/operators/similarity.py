@@ -168,37 +168,6 @@ def _plane_sign(seed: int, plane: int, dim: int) -> float:
     return 1.0 if int(h[0], 16) % 2 == 0 else -1.0
 
 
-def _signature_expr(vec: Column, dims: int, planes: int, seed: int) -> Column:
-    """P-bit signature string, bit p = sign(Σ_d vec[d]·plane[p][d])."""
-    bits = []
-    for p in range(planes):
-        proj = F.aggregate(
-            F.zip_with(
-                vec,
-                F.array(*[F.lit(_plane_sign(seed, p, d)) for d in range(dims)]),
-                lambda x, s: x.cast("double") * s,
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        bits.append(F.when(proj >= 0, F.lit("1")).otherwise(F.lit("0")))
-    return F.concat(*bits)
-
-
-def lsh_bucket(
-    df: DataFrame,
-    dims: int = 64,
-    planes: int = 8,
-    seed: int = 42,
-    vec_col: str = "embedding",
-    bucket_col: str = "bucket",
-) -> DataFrame:
-    """Attach a ``bucket`` signature column (map-side only, no shuffle)."""
-    return df.withColumn(
-        bucket_col, _signature_expr(F.col(vec_col), dims, planes, seed)
-    )
-
-
 QUANT = 1 << 20  # fixed-point scale for integer hyperplane projections
 
 
@@ -317,14 +286,6 @@ def _query_bits(query_vec: list[float], dims: int, n_planes: int, seed: int) -> 
             math.floor(float(query_vec[d]) * QUANT) * int(_plane_sign(seed, p, d))
             for d in range(dims)
         )
-        bits.append("1" if proj >= 0 else "0")
-    return "".join(bits)
-
-
-def _query_signature(query_vec: list[float], dims: int, planes: int, seed: int) -> str:
-    bits = []
-    for p in range(planes):
-        proj = sum(query_vec[d] * _plane_sign(seed, p, d) for d in range(dims))
         bits.append("1" if proj >= 0 else "0")
     return "".join(bits)
 

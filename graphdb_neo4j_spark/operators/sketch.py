@@ -817,13 +817,6 @@ def bloom_probe(
     return hit
 
 
-def bloom_positions_sql(key_sql: str, lanes: int = BLOOM_LANES) -> list[str]:
-    """The same lane positions in DuckDB SQL."""
-    from graphdb_neo4j_spark.operators.sampling import hash_bucket_sql
-
-    return [hash_bucket_sql(key_sql, f"bloom{i}") for i in range(lanes)]
-
-
 def mg_candidates(
     items: DataFrame, col: str, k: int = 200
 ) -> DataFrame:

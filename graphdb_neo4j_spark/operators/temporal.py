@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from graphdb_neo4j_spark.operators.order import materialize
+
 
 def asof_join(
     left: DataFrame,
@@ -161,7 +163,7 @@ def interval_concurrency(
     )
     if keys:
         return agg
-    out = agg.localCheckpoint(eager=True)
+    out, _ = materialize(agg)
     handle.release()
     return out
 

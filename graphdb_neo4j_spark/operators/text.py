@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from graphdb_neo4j_spark.operators.order import materialize
+
 # small multilingual stopword table for the n-gram/stopword language vote
 LANG_STOPWORDS = {
     "en": ["the", "and", "of", "to", "a"],
@@ -45,10 +47,6 @@ def bpe_ish_token_count(text: Column) -> Column:
             lambda t: (t != "") & (t != " "),
         )
     )
-
-
-def char_len(text: Column) -> Column:
-    return F.length(text)
 
 
 def word_ngrams_of(text: Column, toks: Column, n: int = 3) -> Column:
@@ -580,47 +578,6 @@ def extract_links_sql(expr: str) -> str:
     return f"regexp_extract_all({expr}, {_sql_quote(_HREF_RE)}, 1)"
 
 
-def with_text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    # tokenize/lower ONCE into attributes, then compute every stat from
-    # them (see word_ngrams_of for the per-reference re-evaluation trap)
-    t = F.col(text_col)
-    toks, ltoks, lt = F.col("__ts_toks"), F.col("__ts_ltoks"), F.col("__ts_lt")
-    pre = df.withColumns(
-        {
-            "__ts_toks": tokens(t),
-            "__ts_ltoks": tokens(F.lower(t)),
-            "__ts_lt": F.lower(t),
-        }
-    )
-    scored = pre.withColumns(
-        {f"__ts_s_{code}": s for code, s in lang_scores_of(ltoks)}
-    )
-    lang = lang_guess_from_scores(
-        [
-            (code, F.col(f"__ts_s_{code}"))
-            for code in sorted(LANG_STOPWORDS)
-        ]
-    )
-    return scored.withColumns(
-        {
-            "n_tokens": F.when(F.trim(t) == "", F.lit(0)).otherwise(
-                F.size(toks)
-            ),
-            "n_chars_calc": char_len(t),
-            "punct_ratio": punct_ratio(t),
-            "stopword_ratio": stopword_ratio_of(ltoks),
-            "quality": quality_score_of(t, toks, ltoks),
-            "lang_guess": lang,
-            "fingerprint": fingerprint_of(lt),
-        }
-    ).drop(
-        "__ts_toks",
-        "__ts_ltoks",
-        "__ts_lt",
-        *[f"__ts_s_{code}" for code in sorted(LANG_STOPWORDS)],
-    )
-
-
 def quality_filter(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -797,7 +754,7 @@ def bpe_learn(
         ),
         F.array(F.lit("</w>")),
     )
-    vocab = words.select("cnt", syms.alias("syms")).localCheckpoint()
+    vocab, _ = materialize(words.select("cnt", syms.alias("syms")))
     merges = []
     for step in range(1, num_merges + 1):
         pairs = (
@@ -833,7 +790,7 @@ def bpe_learn(
                 ),
             ).otherwise(F.concat(acc, F.array(x))),
         )
-        vocab = vocab.select("cnt", folded.alias("syms")).localCheckpoint()
+        vocab, _ = materialize(vocab.select("cnt", folded.alias("syms")))
     return spark.createDataFrame(
         merges, ["step", "left", "right", "merged", "pair_count"]
     )
@@ -859,7 +816,7 @@ def bpe_encode_words(words: DataFrame, merges_df: DataFrame) -> DataFrame:
         ),
         F.array(F.lit("</w>")),
     )
-    vocab = words.select("word", syms.alias("syms")).localCheckpoint()
+    vocab, _ = materialize(words.select("word", syms.alias("syms")))
     for l, r in merges:
         ll, rr = F.lit(l), F.lit(r)
         folded = F.aggregate(
@@ -872,7 +829,7 @@ def bpe_encode_words(words: DataFrame, merges_df: DataFrame) -> DataFrame:
                 ),
             ).otherwise(F.concat(acc, F.array(x))),
         )
-        vocab = vocab.select("word", folded.alias("syms")).localCheckpoint()
+        vocab, _ = materialize(vocab.select("word", folded.alias("syms")))
     return vocab
 
 

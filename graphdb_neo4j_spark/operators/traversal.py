@@ -6,8 +6,8 @@ Spark SQL lacks; the standard Spark-first answer (SURVEY.md §2.D, §4)
 is a driver-side loop over DataFrames:
 
 * **semi-naive frontier BFS** — each iteration expands only the delta
-  frontier (new nodes), unions into the visited set, and
-  ``localCheckpoint()``s to truncate lineage (without it the plan tree
+  frontier (new nodes), unions into the visited set, and freezes
+  it with ``order.materialize`` to truncate lineage (without it the plan tree
   doubles every iteration and the driver OOMs on plan analysis long
   before data is a problem).
 * **HashMin connected components** — propagate min component id along
@@ -21,9 +21,11 @@ is a driver-side loop over DataFrames:
 
 Scale notes: every iteration is one shuffle (groupBy dst).  The frontier
 DataFrame stays partitioned by key; AQE coalesces as the frontier
-shrinks.  ``localCheckpoint(eager=True)`` materializes to executor
-storage — on a real cluster prefer reliable ``checkpoint()`` to survive
-executor loss on long traversals.
+shrinks.  Every freeze goes through ``order.materialize``: ``local``
+(executor storage) by default, ``reliable`` for Louvain, and
+``SPARK_GRAFT_RELIABLE_FREEZE=1`` upgrades every ``local`` freeze so a
+cluster run survives executor loss on long traversals; loop-invariant
+edge frames use its ``layout`` mode.
 """
 
 from __future__ import annotations
@@ -31,174 +33,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from graphdb_neo4j_spark.operators.order import materialize
+
 
 def _as_undirected(edges: DataFrame) -> DataFrame:
     fwd = edges.select("src", "dst")
     rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     return fwd.unionByName(rev)
-
-
-def partitioned_checkpoint(df: DataFrame, col: str) -> DataFrame:
-    """Checkpoint ``df`` hash-partitioned on ``col``.
-
-    CAVEAT (measured r7): a checkpointed Dataset scans as an
-    ``ExistingRDD`` with ``UnknownPartitioning``, so downstream plans
-    CANNOT see the layout — a per-round join on ``col`` still inserts
-    a full Exchange + Sort on this side every round.  The physical
-    rows being pre-grouped makes that exchange mostly node-local, but
-    it is not free.  For a LOOP-INVARIANT table whose layout must be
-    visible to Catalyst, use :func:`partitioned_cache` instead; keep
-    this for state that must be hard-frozen (lineage truncation)."""
-    n_shuffle = int(
-        df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
-    return df.repartition(n_shuffle, col).localCheckpoint()
-
-
-def partitioned_cache(df: DataFrame, col: str) -> DataFrame:
-    """Hash-partition on ``col``, sort within partitions, and PERSIST —
-    the layout discipline for a LOOP-INVARIANT table (an iterative
-    kernel's edge frame) that many per-round plans will join on
-    ``col``.
-
-    Unlike a checkpoint, ``InMemoryRelation`` PRESERVES the child
-    plan's outputPartitioning and outputOrdering metadata, so every
-    round's join sees this side as already hash-partitioned AND
-    sorted: zero Exchange, zero Sort, only the vertex-sized state
-    moves.  (Verified empirically: the same frame localCheckpoint'd
-    scans as UnknownPartitioning and re-exchanges + re-sorts 2|E| rows
-    EVERY round; swapping the Louvain edge frame to this cache
-    measured median round exec 13.5s -> 6.2s, −54%, over 16
-    interleaved rounds at sf0.1, assignments bit-identical.)
-
-    Cache ≠ freeze: lineage is retained, so this is ONLY for
-    loop-invariant frames computed once — per-round evolving state
-    still needs :func:`df_freeze`.  MEMORY_AND_DISK spills rather than
-    evicting, so release is safe under pressure; the CALLER owns
-    ``unpersist()``.  On a real cluster the equivalent durable layout
-    is a bucketed+sorted table (same metadata visibility); measured
-    here, the one-time bucketed write cost exceeds the cache's at
-    local scale (see the kernel's negative-result notes)."""
-    n_shuffle = int(
-        df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
-    out = (
-        df.repartition(n_shuffle, col).sortWithinPartitions(col).persist()
-    )
-    out.count()
-    return out
-
-
-def rdd_freeze(df_in: DataFrame, prev_rdd=None):
-    """Materialize ``df_in`` to a persisted RDD and rebase the DataFrame
-    on it — the hard per-round state freeze for iterative loops.
-
-    ``Dataset.localCheckpoint`` is unreliable under AQE for loop shapes
-    that reference the per-round state several times in the next round's
-    plan: the checkpoint marker can land on a pre-replan RDD whose full
-    lineage is retained, so round cost compounds (measured on the
-    Louvain kernel: 0.7s -> 67s over 8 rounds).  Persisting the final
-    RDD explicitly and rebasing via ``createDataFrame`` pins the actual
-    computed partitions; rounds stay O(1).
-
-    Returns ``(frozen_df, rdd)``; pass the previous round's ``rdd`` back
-    as ``prev_rdd`` so it unpersists only AFTER the new round is
-    materialized (the new plan may read it).
-
-    Audit note (this session, local[32]): the simpler loops here — the
-    pagerank power iteration, label_propagation, k_core peel, HashMin
-    components — were probed at 4/8/16-20 rounds and show FLAT
-    per-round cost with plain ``localCheckpoint``; only the Louvain
-    local-moving shape (state referenced ~4x per round) exhibited the
-    pathology.  Use this helper for any new operator with that shape.
-    """
-    spark = df_in.sparkSession
-    rdd = df_in.rdd
-    rdd.persist()
-    rdd.count()
-    out = spark.createDataFrame(rdd, df_in.schema)
-    if prev_rdd is not None:
-        prev_rdd.unpersist()
-    return out, rdd
-
-
-def rdd_freeze_counting(df_in, count_where, prev_rdd=None):
-    """`rdd_freeze` variant that folds a row-predicate count into the
-    SAME materialization job (persist caches the parent's partitions
-    while the filtered count runs), so convergence checks like "how
-    many rows moved this round" cost zero extra jobs.  The predicate
-    runs on the already-Python-side Row objects of the freeze path —
-    vertex-sized state, never data-sized.
-
-    Returns ``(frozen_df, rdd, n_matching)``.
-    """
-    spark = df_in.sparkSession
-    rdd = df_in.rdd
-    rdd.persist()
-    n = rdd.filter(count_where).count()
-    out = spark.createDataFrame(rdd, df_in.schema)
-    if prev_rdd is not None:
-        prev_rdd.unpersist()
-    return out, rdd, n
-
-
-def _ensure_checkpoint_dir(spark) -> None:
-    """Set a session checkpoint dir if none is configured (local runs:
-    a tempdir; on a cluster, configure a durable FS dir up front and
-    this is a no-op)."""
-    if spark.sparkContext._jsc.sc().getCheckpointDir().isEmpty():
-        import tempfile
-
-        spark.sparkContext.setCheckpointDir(
-            tempfile.mkdtemp(prefix="spark-graft-ckpt-")
-        )
-
-
-def df_freeze(df_in: DataFrame, prev=None):
-    """JVM-side hard per-round freeze: eager RELIABLE
-    ``Dataset.checkpoint`` — materializes the final (post-AQE) RDD to
-    the checkpoint dir and rebases the plan on it, truncating lineage
-    without ever piping rows through Python workers (``rdd_freeze``
-    deserializes the vertex state in Python once per materialization
-    AND once per downstream JVM read — measured ~2x the Louvain
-    kernel's exec time at sf0.1).  ``prev`` is accepted for signature
-    parity and ignored: checkpoint files are owned by the session —
-    ``get_spark`` sets ``spark.cleaner.referenceTracking
-    .cleanCheckpoints=true`` so the ContextCleaner deletes each round's
-    file once its RDD is GC'd (ADVICE r6: without it a long-lived
-    session accumulated checkpoints unboundedly), and on local runs the
-    tempdir dies with the box regardless.
-
-    Returns ``(frozen_df, None)`` matching ``rdd_freeze``'s shape.
-    """
-    _ensure_checkpoint_dir(df_in.sparkSession)
-    return df_in.checkpoint(eager=True), None
-
-
-def df_freeze_counting(df_in: DataFrame, cond, prev=None):
-    """``df_freeze`` + a row-predicate count evaluated JVM-side on the
-    already-checkpointed data (``cond`` is a Column, not a Python
-    lambda).  Returns ``(frozen_df, None, n_matching)``."""
-    out, _ = df_freeze(df_in, prev)
-    return out, None, out.filter(cond).count()
-
-
-def _chain_persist(df: DataFrame, prev: DataFrame | None = None) -> DataFrame:
-    """Eagerly materialize ``df`` in the DataFrame cache and release the
-    previous round's cache handle AFTERWARDS (the new plan may read it).
-
-    The walk/accumulator loops use this so at most two round-frames are
-    cached at any moment instead of one per step.  MEMORY_AND_DISK (the
-    DataFrame default) spills instead of evicting, so releasing the
-    upstream handle cannot trigger a lineage recompute cascade under
-    memory pressure; on a real cluster swap the terminal frame for a
-    fault-tolerant ``checkpoint()``.
-    """
-    df = df.persist()
-    df.count()
-    if prev is not None:
-        prev.unpersist()
-    return df
 
 
 def bfs(
@@ -215,10 +56,9 @@ def bfs(
     """
     e = edges.select("src", "dst") if directed else _as_undirected(edges)
     key_col = sources.columns[0]
-    visited = (
+    visited, _ = materialize(
         sources.select(F.col(key_col).alias("key")).distinct()
         .withColumn("dist", F.lit(0))
-        .localCheckpoint()
     )
     frontier = visited
     hop = 0
@@ -233,7 +73,7 @@ def bfs(
             .join(visited.select("key"), "key", "left_anti")
             .withColumn("dist", F.lit(hop))
         )
-        nxt = nxt.localCheckpoint()
+        nxt, _ = materialize(nxt)
         if nxt.isEmpty():
             break
         # visited stays a LAZY union of already-checkpointed frontier
@@ -245,7 +85,7 @@ def bfs(
         # graph cannot grow the union plan without limit.
         visited = visited.unionByName(nxt)
         if hop % 32 == 0:
-            visited = visited.localCheckpoint()
+            visited, _ = materialize(visited)
         frontier = nxt
     return visited
 
@@ -264,22 +104,21 @@ def shortest_path_length(
     Early-exits as soon as the destination enters the visited set."""
     spark = edges.sparkSession
     e = edges.select("src", "dst") if directed else _as_undirected(edges)
-    visited = spark.createDataFrame([(src_key, 0)], ["key", "dist"]).localCheckpoint()
+    visited, _ = materialize(spark.createDataFrame([(src_key, 0)], ["key", "dist"]))
     frontier = visited
     for hop in range(1, max_hops + 1):
-        nxt = (
+        nxt, _ = materialize(
             frontier.join(e, frontier["key"] == e["src"])
             .select(F.col("dst").alias("key"))
             .distinct()
             .join(visited.select("key"), "key", "left_anti")
             .withColumn("dist", F.lit(hop))
-            .localCheckpoint()
         )
         if nxt.isEmpty():
             return None
         if not nxt.filter(F.col("key") == dst_key).isEmpty():
             return hop
-        visited = visited.unionByName(nxt).localCheckpoint()
+        visited, _ = materialize(visited.unionByName(nxt))
         frontier = nxt
     return None
 
@@ -306,11 +145,10 @@ def bfs_tree(
         until.select(F.col(until.columns[0]).alias("key")).distinct()
         if until is not None else None
     )
-    visited = (
+    visited, _ = materialize(
         sources.select(F.col(key_col).alias("key")).distinct()
         .withColumn("dist", F.lit(0))
         .withColumn("pred", F.lit(None).cast(e.schema["src"].dataType))
-        .localCheckpoint()
     )
     frontier = visited
     hop = 0
@@ -318,7 +156,7 @@ def bfs_tree(
         hop += 1
         if max_hops is not None and hop > max_hops:
             break
-        nxt = (
+        nxt, _ = materialize(
             frontier.join(e, frontier["key"] == e["src"])
             .select(F.col("dst").alias("key"), frontier["key"].alias("pred"))
             .groupBy("key")
@@ -326,11 +164,10 @@ def bfs_tree(
             .join(visited.select("key"), "key", "left_anti")
             .withColumn("dist", F.lit(hop))
             .select("key", "dist", "pred")
-            .localCheckpoint()
         )
         if nxt.isEmpty():
             break
-        visited = visited.unionByName(nxt).localCheckpoint()
+        visited, _ = materialize(visited.unionByName(nxt))
         frontier = nxt
         if stop is not None and stop.join(visited, "key", "left_anti").isEmpty():
             break
@@ -359,11 +196,11 @@ def _backtrace_paths_doubling(
     if max_rounds is None:
         n = tree.count()
         max_rounds = math.ceil(math.log2(max(n, 2))) + 1
-    p = tree.select(
+    p, _ = materialize(tree.select(
         "key", "dist",
         F.col("pred").alias("anc"),
         F.array("key").alias("seg"),
-    ).localCheckpoint()
+    ))
     rounds = 0
     while rounds < max_rounds:
         rounds += 1
@@ -380,10 +217,9 @@ def _backtrace_paths_doubling(
             F.col("anc2").alias("anc"),
             F.concat(F.col("seg2"), F.col("seg")).alias("seg"),
         )
-        p = (
+        p, _ = materialize(
             p.filter(F.col("anc").isNull())
             .unionByName(stepped)
-            .localCheckpoint()
         )
     # rows still carrying an ancestor at the bound are cyclic pred
     # chains (never reach a root) — cut, not returned with partial paths
@@ -419,29 +255,28 @@ def _backtrace_paths(
             F.col(targets.columns[0]).alias("key")
         ).distinct()
         start = tree.join(t, "key", "left_semi")
-    paths = start.select(
+    paths, _ = materialize(start.select(
         "key", "dist",
         F.col("pred").alias("cur"),
         F.array("key").alias("path"),
-    ).localCheckpoint()
+    ))
     done = paths.filter(F.col("cur").isNull()).select("key", "dist", "path")
     todo = paths.filter(F.col("cur").isNotNull())
     links = tree.select(F.col("key").alias("cur"), F.col("pred").alias("nxt"))
     rounds = 0
     while not todo.isEmpty() and rounds < max_rounds:
         rounds += 1
-        stepped = (
+        stepped, _ = materialize(
             todo.join(links, "cur")
             .select(
                 "key", "dist",
                 F.col("nxt").alias("cur"),
                 F.concat(F.array(F.col("cur")), F.col("path")).alias("path"),
             )
-            .localCheckpoint()
         )
-        done = done.unionByName(
+        done, _ = materialize(done.unionByName(
             stepped.filter(F.col("cur").isNull()).select("key", "dist", "path")
-        ).localCheckpoint()
+        ))
         todo = stepped.filter(F.col("cur").isNotNull())
     return done
 
@@ -493,12 +328,11 @@ def connected_components(
     """(key, component) — component = min key (lexicographic) in the
     weakly-connected component.  HashMin label propagation.
     """
-    e = _as_undirected(edges).distinct().localCheckpoint()
+    e, _ = materialize(_as_undirected(edges).distinct())
     key_col = nodes.columns[0]
-    comp = (
+    comp, _ = materialize(
         nodes.select(F.col(key_col).alias("key")).distinct()
         .withColumn("component", F.col("key"))
-        .localCheckpoint()
     )
     for _ in range(max_iter):
         # candidate component = min over self and neighbors' components
@@ -506,11 +340,10 @@ def connected_components(
             comp.join(e, comp["key"] == e["src"])
             .select(F.col("dst").alias("key"), "component")
         )
-        new_comp = (
+        new_comp, _ = materialize(
             comp.select("key", "component").unionByName(msgs)
             .groupBy("key")
             .agg(F.min("component").alias("component"))
-            .localCheckpoint()
         )
         changed = (
             new_comp.alias("n")
@@ -536,11 +369,10 @@ def connected_components_twophase(
     contracts toward a star per component, whose center is the
     component minimum.  Results are identical to HashMin.
     """
-    e = (
+    e, _ = materialize(
         edges.select("src", "dst")
         .filter(F.col("src") != F.col("dst"))
         .distinct()
-        .localCheckpoint()
     )
     prev_sig = None
     for _ in range(max_iter):
@@ -572,7 +404,7 @@ def connected_components_twophase(
         g2 = canon.groupBy("u").agg(
             F.min("v").alias("m"), F.collect_set("v").alias("ns")
         )
-        small = (
+        small, _ = materialize(
             g2.select(
                 "u",
                 "m",
@@ -581,7 +413,6 @@ def connected_components_twophase(
             .filter(F.col("v") != F.col("m"))
             .select(F.col("v").alias("src"), F.col("m").alias("dst"))
             .distinct()
-            .localCheckpoint()
         )
         sig_row = small.agg(
             F.count("*").alias("n"),
@@ -620,14 +451,14 @@ def pagerank(
         )
     else:
         verts = nodes.select(F.col(nodes.columns[0]).alias("key")).distinct()
-    verts = verts.localCheckpoint()
+    verts, _ = materialize(verts)
     # the edge table is partitioned on src ONCE, up front: the
     # out-degree aggregate and its join back reuse that single
     # exchange during SETUP.  Honesty note (r7 finding): the
     # checkpointed `links` scans as UnknownPartitioning, so each
     # ITERATION's join still re-exchanges it — on the small corpus
-    # graph this is sub-noise; converting to partitioned_cache (the
-    # Louvain fix) is the lever if a big graph ever lands here, but
+    # graph this is sub-noise; converting to materialize's layout mode
+    # (the Louvain fix) is the lever if a big graph ever lands here, but
     # beware: cached stats let AQE broadcast the rank side, and a
     # per-iteration rank broadcast measured 1.5-2s SLOWER on the
     # corpus graph (driver collect + rebroadcast each round).
@@ -641,10 +472,9 @@ def pagerank(
     out_deg = e_p.groupBy(F.col("src").alias("key")).agg(
         F.count("*").alias("out_degree")
     )
-    links = (
+    links, _ = materialize(
         e_p.join(out_deg, e_p["src"] == out_deg["key"])
         .select("src", "dst", "out_degree")
-        .localCheckpoint()
     )
     ranks = verts.withColumn("rank", F.lit(1.0))
     for _ in range(iterations):
@@ -657,7 +487,7 @@ def pagerank(
             .groupBy("key")
             .agg(F.sum("contrib").alias("contrib"))
         )
-        ranks = (
+        ranks, _ = materialize(
             verts.join(contribs, "key", "left")
             .select(
                 "key",
@@ -665,7 +495,6 @@ def pagerank(
                  + F.lit(damping) * F.coalesce(F.col("contrib"), F.lit(0.0))
                  ).alias("rank"),
             )
-            .localCheckpoint()
         )
     return ranks
 
@@ -678,24 +507,22 @@ def k_core(nodes: DataFrame, edges: DataFrame, k: int, max_iter: int = 100) -> D
     peeling depth (small for provenance graphs).
     """
     key_col = nodes.columns[0]
-    und = (
+    und, _ = materialize(
         _as_undirected(edges)
         .filter(F.col("src") != F.col("dst"))
         .distinct()
-        .localCheckpoint()
     )
-    remaining = nodes.select(F.col(key_col).alias("key")).distinct().localCheckpoint()
+    remaining, _ = materialize(nodes.select(F.col(key_col).alias("key")).distinct())
     for _ in range(max_iter):
         e = (
             und.join(remaining.select(F.col("key").alias("src")), "src", "left_semi")
             .join(remaining.select(F.col("key").alias("dst")), "dst", "left_semi")
         )
         deg = e.groupBy(F.col("src").alias("key")).agg(F.count("*").alias("deg"))
-        keep = (
+        keep, _ = materialize(
             remaining.join(deg, "key", "left")
             .filter(F.coalesce(F.col("deg"), F.lit(0)) >= k)
             .select("key")
-            .localCheckpoint()
         )
         if keep.count() == remaining.count():
             break
@@ -721,17 +548,16 @@ def core_decomposition(
     step a plain aggregate.
     """
     key_col = nodes.columns[0]
-    und = (
+    und, _ = materialize(
         _as_undirected(edges)
         .filter(F.col("src") != F.col("dst"))
         .distinct()
-        .localCheckpoint()
     )
-    remaining = (
-        nodes.select(F.col(key_col).alias("key")).distinct().localCheckpoint()
+    remaining, _ = materialize(
+        nodes.select(F.col(key_col).alias("key")).distinct()
     )
     spark = nodes.sparkSession
-    out = spark.createDataFrame([], "v string, coreness int").localCheckpoint()
+    out, _ = materialize(spark.createDataFrame([], "v string, coreness int"))
     for k in range(1, max_core + 1):
         survivors = remaining
         while True:
@@ -745,11 +571,10 @@ def core_decomposition(
             deg = e.groupBy(F.col("src").alias("key")).agg(
                 F.count("*").alias("deg")
             )
-            keep = (
+            keep, _ = materialize(
                 survivors.join(deg, "key", "left")
                 .filter(F.coalesce(F.col("deg"), F.lit(0)) >= k)
                 .select("key")
-                .localCheckpoint()
             )
             if keep.count() == survivors.count():
                 break
@@ -757,7 +582,7 @@ def core_decomposition(
         peeled = remaining.join(survivors, "key", "left_anti").select(
             F.col("key").alias("v"), F.lit(k - 1).cast("int").alias("coreness")
         )
-        out = out.unionByName(peeled).localCheckpoint()
+        out, _ = materialize(out.unionByName(peeled))
         remaining = survivors
         if remaining.isEmpty():
             break
@@ -783,8 +608,10 @@ def strongly_connected_components(
     driver-side graph state.
     """
     key_col = nodes.columns[0]
-    remaining = nodes.select(F.col(key_col).alias("key")).distinct().localCheckpoint()
-    e_all = edges.select("src", "dst").filter(F.col("src") != F.col("dst")).distinct().localCheckpoint()
+    remaining, _ = materialize(nodes.select(F.col(key_col).alias("key")).distinct())
+    e_all, _ = materialize(
+        edges.select("src", "dst").filter(F.col("src") != F.col("dst")).distinct()
+    )
     parts: list[DataFrame] = []
 
     def trim(rem: DataFrame, e: DataFrame):
@@ -797,22 +624,20 @@ def strongly_connected_components(
         while not rem.isEmpty():
             has_in = e.select(F.col("dst").alias("key")).distinct()
             has_out = e.select(F.col("src").alias("key")).distinct()
-            keep = (
+            keep, _ = materialize(
                 rem.join(has_in, "key", "left_semi")
                 .join(has_out, "key", "left_semi")
-                .localCheckpoint()
             )
             trivial = rem.join(keep, "key", "left_anti")
             if trivial.isEmpty():
                 break
             parts.append(
-                trivial.select("key", F.col("key").alias("component")).localCheckpoint()
+                materialize(trivial.select("key", F.col("key").alias("component")))[0]
             )
             rem = keep
-            e = (
+            e, _ = materialize(
                 e.join(rem.select(F.col("key").alias("src")), "src", "left_semi")
                 .join(rem.select(F.col("key").alias("dst")), "dst", "left_semi")
-                .localCheckpoint()
             )
         return rem, e
 
@@ -826,17 +651,16 @@ def strongly_connected_components(
         e = e_rem
         # forward min-propagation to fixed point: color(v) = min id
         # reaching v (including v itself)
-        color = remaining.withColumn("color", F.col("key")).localCheckpoint()
+        color, _ = materialize(remaining.withColumn("color", F.col("key")))
         for _ in range(max_prop):
             msgs = (
                 color.join(e, color["key"] == e["src"])
                 .select(F.col("dst").alias("key"), "color")
             )
-            new_color = (
+            new_color, _ = materialize(
                 color.select("key", "color").unionByName(msgs)
                 .groupBy("key")
                 .agg(F.min("color").alias("color"))
-                .localCheckpoint()
             )
             changed = (
                 new_color.alias("n")
@@ -847,10 +671,9 @@ def strongly_connected_components(
             if changed.isEmpty():
                 break
         # SCC of root r = backward closure of r within color class r
-        assigned = (
+        assigned, _ = materialize(
             color.filter(F.col("color") == F.col("key"))
             .select("key", F.col("key").alias("component"))
-            .localCheckpoint()
         )
         frontier = assigned
         while True:
@@ -859,25 +682,23 @@ def strongly_connected_components(
                 .select(F.col("src").alias("key"), "component")
                 .distinct()
             )
-            preds = (
+            preds, _ = materialize(
                 preds.join(color, "key")
                 .filter(F.col("color") == F.col("component"))
                 .select("key", "component")
                 .join(assigned.select("key"), "key", "left_anti")
-                .localCheckpoint()
             )
             if preds.isEmpty():
                 break
-            assigned = assigned.unionByName(preds).localCheckpoint()
+            assigned, _ = materialize(assigned.unionByName(preds))
             frontier = preds
         parts.append(assigned)
-        remaining = remaining.join(
+        remaining, _ = materialize(remaining.join(
             assigned.select("key"), "key", "left_anti"
-        ).localCheckpoint()
-        e_rem = (
+        ))
+        e_rem, _ = materialize(
             e.join(remaining.select(F.col("key").alias("src")), "src", "left_semi")
             .join(remaining.select(F.col("key").alias("dst")), "dst", "left_semi")
-            .localCheckpoint()
         )
         # extraction exposes new zero-degree vertices — re-trim before
         # paying for another coloring fixed point
@@ -911,8 +732,10 @@ def betweenness_approx(
     max simply contributes no rows at the deeper levels.
     """
     key_col = nodes.columns[0]
-    verts = nodes.select(F.col(key_col).alias("key")).distinct().localCheckpoint()
-    e = (edges.select("src", "dst") if directed else _as_undirected(edges)).distinct().localCheckpoint()
+    verts, _ = materialize(nodes.select(F.col(key_col).alias("key")).distinct())
+    e, _ = materialize(
+        (edges.select("src", "dst") if directed else _as_undirected(edges)).distinct()
+    )
     n_vertices = verts.count()
     pivots = [
         r["key"]
@@ -922,37 +745,35 @@ def betweenness_approx(
         .collect()
     ]
     spark = edges.sparkSession
-    acc = verts.withColumn("betweenness", F.lit(0.0)).localCheckpoint()
+    acc, _ = materialize(verts.withColumn("betweenness", F.lit(0.0)))
     if not pivots:
         return acc.select("key", "betweenness")
     # forward pass: tagged path counts σ per (pivot, key), one level of
     # ALL pivots per round; levels[h] = (pivot, key, sigma)
-    level = (
+    level, _ = materialize(
         spark.createDataFrame([(p,) for p in pivots], ["pivot"])
         .select("pivot", F.col("pivot").alias("key"))
         .withColumn("sigma", F.lit(1.0))
-        .localCheckpoint()
     )
     levels = [level]
-    seen = level.select("pivot", "key").localCheckpoint()
+    seen, _ = materialize(level.select("pivot", "key"))
     for _ in range(max_hops):
-        nxt = (
+        nxt, _ = materialize(
             level.join(e, level["key"] == e["src"])
             .groupBy("pivot", F.col("dst").alias("k2"))
             .agg(F.sum("sigma").alias("sigma"))
             .select("pivot", F.col("k2").alias("key"), "sigma")
             .join(seen, ["pivot", "key"], "left_anti")
-            .localCheckpoint()
         )
         if nxt.isEmpty():
             break
         levels.append(nxt)
-        seen = seen.unionByName(nxt.select("pivot", "key")).localCheckpoint()
+        seen, _ = materialize(seen.unionByName(nxt.select("pivot", "key")))
         level = nxt
     # backward dependency sweep, level-synchronous across pivots
-    delta = levels[-1].select(
+    delta, _ = materialize(levels[-1].select(
         "pivot", "key", F.lit(0.0).alias("delta")
-    ).localCheckpoint()
+    ))
     for h in range(len(levels) - 1, 0, -1):
         child = levels[h].join(delta, ["pivot", "key"], "left").select(
             "pivot",
@@ -961,7 +782,7 @@ def betweenness_approx(
             F.coalesce(F.col("delta"), F.lit(0.0)).alias("delta"),
         )
         parent_sig = levels[h - 1]
-        contribs = (
+        contribs, _ = materialize(
             parent_sig.join(e, parent_sig["key"] == e["src"])
             .join(
                 child.select(
@@ -983,12 +804,11 @@ def betweenness_approx(
             )
             .groupBy("pivot", "key")
             .agg(F.sum("contrib").alias("delta"))
-            .localCheckpoint()
         )
         delta = contribs  # level h-1's dependencies, consumed next round
         if h - 1 > 0:  # each pivot's own dependency is not counted
             per_key = contribs.groupBy("key").agg(F.sum("delta").alias("__d"))
-            acc = (
+            acc, _ = materialize(
                 acc.join(per_key, "key", "left")
                 .select(
                     "key",
@@ -997,7 +817,6 @@ def betweenness_approx(
                         + F.coalesce(F.col("__d"), F.lit(0.0))
                     ).alias("betweenness"),
                 )
-                .localCheckpoint()
             )
     scale = float(n_vertices) / float(max(len(pivots), 1))
     return acc.select("key", (F.col("betweenness") * F.lit(scale)).alias("betweenness"))
@@ -1030,9 +849,9 @@ def random_walks(
     (nodes × walks_per_node).  Hot-node skew is bounded: the frontier
     row count never grows, unlike BFS frontiers.
 
-    Cache discipline: the output accumulator is chained-persisted each
-    step (its cached data absorbs the prior steps' rows), so step s-1's
-    frontier cache is RELEASED once step s materializes — peak cached
+    Freeze discipline: the output accumulator is frozen each step (its
+    blocks absorb the prior steps' rows), so step s-1's frontier and
+    accumulator are RELEASED once step s materializes — peak frozen
     state is ~2× the final output + two frontiers, never L frontiers.
     """
     und = _as_undirected(edges).distinct()
@@ -1048,14 +867,13 @@ def random_walks(
     )
     out = frontier.select("start", "w", F.lit(0).alias("step"),
                           F.col("cur").alias("node"))
-    prev_f: DataFrame | None = None
-    prev_out: DataFrame | None = None
+    f_h = out_h = None
     for step in range(1, walk_length + 1):
         key = F.concat_ws(
             "|", F.col("start"), F.col("w"), F.lit(step), F.col("cur")
         )
         h = F.conv(F.substring(F.md5(key), 1, 8), 16, 10).cast("bigint")
-        frontier = _chain_persist(
+        frontier, nf_h = materialize(
             frontier.join(adj, frontier["cur"] == adj["src"]).select(
                 "start",
                 "w",
@@ -1064,18 +882,18 @@ def random_walks(
                 ).alias("cur"),
             )
         )
-        out = _chain_persist(
+        out, nout_h = materialize(
             out.unionByName(
                 frontier.select("start", "w", F.lit(step).alias("step"),
                                 F.col("cur").alias("node"))
-            ),
-            prev_out,
+            )
         )
-        if prev_f is not None:
-            prev_f.unpersist()  # its rows are baked into out's cache now
-        prev_f, prev_out = frontier, out
-    if prev_f is not None:
-        prev_f.unpersist()
+        if f_h is not None:  # out is frozen: the superseded round can go
+            f_h.release()
+            out_h.release()
+        f_h, out_h = nf_h, nout_h
+    if f_h is not None:
+        f_h.release()
     adj.unpersist()
     return out
 
@@ -1143,8 +961,7 @@ def weighted_random_walks(
     out = frontier.select(
         "start", "w", F.lit(0).alias("step"), F.col("cur").alias("node")
     )
-    prev_f: DataFrame | None = None
-    prev_out: DataFrame | None = None
+    f_h = out_h = None
     for step in range(1, walk_length + 1):
         key = F.concat_ws(
             "|", F.col("start"), F.col("w"), F.lit(step), F.col("cur")
@@ -1152,27 +969,27 @@ def weighted_random_walks(
         h = F.conv(F.substring(F.md5(key), 1, 8), 16, 10).cast("bigint")
         r = h % F.col("total")
         idx = F.size(F.filter("cumw", lambda c: c <= r)) + F.lit(1)
-        frontier = _chain_persist(
+        frontier, nf_h = materialize(
             frontier.join(adj, frontier["cur"] == adj["src"]).select(
                 "start",
                 "w",
                 F.element_at(F.col("nbrs"), idx).alias("cur"),
             )
         )
-        out = _chain_persist(
+        out, nout_h = materialize(
             out.unionByName(
                 frontier.select(
                     "start", "w", F.lit(step).alias("step"),
                     F.col("cur").alias("node"),
                 )
-            ),
-            prev_out,
+            )
         )
-        if prev_f is not None:
-            prev_f.unpersist()
-        prev_f, prev_out = frontier, out
-    if prev_f is not None:
-        prev_f.unpersist()
+        if f_h is not None:  # out is frozen: the superseded round can go
+            f_h.release()
+            out_h.release()
+        f_h, out_h = nf_h, nout_h
+    if f_h is not None:
+        f_h.release()
     adj.unpersist()
     return out
 
@@ -1229,8 +1046,7 @@ def node2vec_walks(
     )
     a_cur = adj.select(F.col("src").alias("__cs"), F.col("nbrs").alias("__cn"))
     a_prev = adj.select(F.col("src").alias("__ps"), F.col("nbrs").alias("__pn"))
-    prev_f: DataFrame | None = None
-    prev_out: DataFrame | None = None
+    f_h = out_h = None
     for step in range(1, walk_length + 1):
         key = F.concat_ws(
             "|", F.col("start"), F.col("w"), F.lit(step), F.col("cur")
@@ -1260,7 +1076,7 @@ def node2vec_walks(
         # two-step select: computing the pick and renaming cur->prev in ONE
         # list would let Spark's lateral-column-alias resolution bind the
         # `prev` inside `weights` to the new alias instead of the input row
-        frontier = _chain_persist(
+        frontier, nf_h = materialize(
             frontier.join(a_cur, frontier["cur"] == a_cur["__cs"])
             .join(a_prev, frontier["prev"] == a_prev["__ps"], "left")
             .select(
@@ -1274,20 +1090,20 @@ def node2vec_walks(
                 F.col("__next").alias("cur"),
             )
         )
-        out = _chain_persist(
+        out, nout_h = materialize(
             out.unionByName(
                 frontier.select(
                     "start", "w", F.lit(step).alias("step"),
                     F.col("cur").alias("node"),
                 )
-            ),
-            prev_out,
+            )
         )
-        if prev_f is not None:
-            prev_f.unpersist()
-        prev_f, prev_out = frontier, out
-    if prev_f is not None:
-        prev_f.unpersist()
+        if f_h is not None:  # out is frozen: the superseded round can go
+            f_h.release()
+            out_h.release()
+        f_h, out_h = nf_h, nout_h
+    if f_h is not None:
+        f_h.release()
     adj.unpersist()
     return out
 
@@ -1299,14 +1115,13 @@ def triangle_count(edges: DataFrame) -> int:
     enumeration a<b<c — each triangle counted exactly once.  Shuffles:
     2 joins on node id; at scale pre-bucket the canonical edge table.
     """
-    e = (
+    e, _ = materialize(
         _as_undirected(edges)
         .select(
             F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
         )
         .filter(F.col("a") != F.col("b"))
         .distinct()
-        .localCheckpoint()
     )
     ab = e.select(F.col("a"), F.col("b"))
     bc = e.select(F.col("a").alias("b2"), F.col("b").alias("c"))
@@ -1332,22 +1147,20 @@ def label_propagation(
     # reuses the src exchange (subset rule) — one 2|E| shuffle, not
     # two.  Honesty note (r7): the checkpoint scans as
     # UnknownPartitioning, so per-round joins still re-exchange the
-    # edge frame; sub-noise on the corpus graph, and partitioned_cache
-    # is the measured fix if a big graph lands here (Louvain kernel).
+    # edge frame; sub-noise on the corpus graph, and materialize's layout
+    # mode is the measured fix if a big graph lands here (Louvain kernel).
     n_shuffle = int(
         edges.sparkSession.conf.get("spark.sql.shuffle.partitions")
     )
-    e = (
+    e, _ = materialize(
         _as_undirected(edges)
         .repartition(n_shuffle, "src")
         .distinct()
-        .localCheckpoint()
     )
     key_col = nodes.columns[0]
-    labels = (
+    labels, _ = materialize(
         nodes.select(F.col(key_col).alias("key")).distinct()
         .withColumn("label", F.col("key"))
-        .localCheckpoint()
     )
     for _ in range(max_iter):
         msgs = (
@@ -1362,12 +1175,11 @@ def label_propagation(
             .groupBy("key")
             .agg(F.min("label").alias("new_label"))  # ties → smallest label
         )
-        labels = (
+        labels, _ = materialize(
             labels.join(best, "key", "left")
             .select(
                 "key", F.coalesce(F.col("new_label"), F.col("label")).alias("label")
             )
-            .localCheckpoint()
         )
     return labels
 
@@ -1404,20 +1216,19 @@ def personalized_pagerank(
         )
     else:
         verts = nodes.select(F.col(nodes.columns[0]).alias("key")).distinct()
-    verts = verts.localCheckpoint()
+    verts, _ = materialize(verts)
     # restart mass is assigned to DISTINCT sources, so |S| must be the
     # distinct count too — a duplicated source row must not deflate the
     # restart vector below sum=1
-    src_distinct = (
+    src_distinct, _ = materialize(
         sources.select(F.col(sources.columns[0]).alias("key"))
         .distinct()
-        .localCheckpoint()
     )
     n_src = src_distinct.count()
     restart = src_distinct.withColumn("restart", F.lit(1.0 / float(n_src)))
-    base = verts.join(restart, "key", "left").select(
+    base, _ = materialize(verts.join(restart, "key", "left").select(
         "key", F.coalesce(F.col("restart"), F.lit(0.0)).alias("restart")
-    ).localCheckpoint()
+    ))
     # pagerank's layout discipline: one up-front src exchange reused by
     # the out-degree aggregate, the join back, and the per-round layout
     e_p = e.repartition(
@@ -1427,10 +1238,9 @@ def personalized_pagerank(
     out_deg = e_p.groupBy(F.col("src").alias("key")).agg(
         F.count("*").alias("out_degree")
     )
-    links = (
+    links, _ = materialize(
         e_p.join(out_deg, e_p["src"] == out_deg["key"])
         .select("src", "dst", "out_degree")
-        .localCheckpoint()
     )
     ranks = base.select("key", F.col("restart").alias("rank"))
     for _ in range(iterations):
@@ -1443,7 +1253,7 @@ def personalized_pagerank(
             .groupBy("key")
             .agg(F.sum("contrib").alias("contrib"))
         )
-        ranks = (
+        ranks, _ = materialize(
             base.join(contribs, "key", "left")
             .select(
                 "key",
@@ -1451,7 +1261,6 @@ def personalized_pagerank(
                  + F.lit(damping) * F.coalesce(F.col("contrib"), F.lit(0.0))
                  ).alias("rank"),
             )
-            .localCheckpoint()
         )
     return ranks
 
@@ -1493,14 +1302,13 @@ def sssp_weighted(
                 F.col("dst").alias("src"), F.col("src").alias("dst"), w.alias("w")
             )
         )
-    e = e.localCheckpoint()
+    e, _ = materialize(e)
     if not e.filter(F.col("w") < 0).isEmpty():
         raise ValueError("sssp_weighted requires non-negative weights")
-    dist = (
+    dist, _ = materialize(
         sources.select(F.col(sources.columns[0]).alias("key")).distinct()
         .withColumn("dist", F.lit(0.0))
         .withColumn("pred", F.lit(None).cast(e.schema["src"].dataType))
-        .localCheckpoint()
     )
     frontier = dist
     for _ in range(max_iter):
@@ -1518,20 +1326,18 @@ def sssp_weighted(
                 "key", F.col("m.cand").alias("cand"), F.col("m.parent").alias("parent")
             )
         )
-        improved = (
+        improved, _ = materialize(
             cand.join(dist.select("key", "dist"), "key", "left")
             .filter(F.col("dist").isNull() | (F.col("cand") < F.col("dist")))
             .select(
                 "key", F.col("cand").alias("dist"), F.col("parent").alias("pred")
             )
-            .localCheckpoint()
         )
         if improved.isEmpty():
             break
-        dist = (
+        dist, _ = materialize(
             dist.join(improved.select("key"), "key", "left_anti")
             .unionByName(improved)
-            .localCheckpoint()
         )
         frontier = improved
     return dist if with_pred else dist.select("key", "dist")
@@ -1573,13 +1379,12 @@ def k_truss(edges: DataFrame, k: int, max_iter: int = 30) -> DataFrame:
     join Catalyst plans — no driver-side adjacency.  Rounds are bounded
     by the peeling depth.  Returns canonical src < dst pairs.
     """
-    canon = (
+    canon, _ = materialize(
         edges.select(
             F.least("src", "dst").alias("src"), F.greatest("src", "dst").alias("dst")
         )
         .filter(F.col("src") != F.col("dst"))
         .distinct()
-        .localCheckpoint()
     )
     while max_iter > 0:
         max_iter -= 1
@@ -1596,11 +1401,10 @@ def k_truss(edges: DataFrame, k: int, max_iter: int = 30) -> DataFrame:
             .groupBy(canon["src"], canon["dst"])
             .agg(F.count("*").alias("support"))
         )
-        keep = (
+        keep, _ = materialize(
             canon.join(support, ["src", "dst"], "left")
             .filter(F.coalesce(F.col("support"), F.lit(0)) >= k - 2)
             .select("src", "dst")
-            .localCheckpoint()
         )
         if keep.count() == canon.count():
             break
@@ -1629,12 +1433,11 @@ def temporal_bfs(
     join + one grouped min per round.
     """
     e = edges.select("src", "dst", F.col(time_col).cast("long").alias("t"))
-    e = e.localCheckpoint()
+    e, _ = materialize(e)
     neg_inf = F.lit(-(1 << 62)).cast("long")
-    arrive = (
+    arrive, _ = materialize(
         sources.select(F.col(sources.columns[0]).alias("key")).distinct()
         .withColumn("earliest", neg_inf)
-        .localCheckpoint()
     )
     frontier = arrive
     for _ in range(max_iter):
@@ -1645,18 +1448,16 @@ def temporal_bfs(
             .groupBy("key")
             .agg(F.min("cand").alias("cand"))
         )
-        improved = (
+        improved, _ = materialize(
             cand.join(arrive, "key", "left")
             .filter(F.col("earliest").isNull() | (F.col("cand") < F.col("earliest")))
             .select("key", F.col("cand").alias("earliest"))
-            .localCheckpoint()
         )
         if improved.isEmpty():
             break
-        arrive = (
+        arrive, _ = materialize(
             arrive.join(improved.select("key"), "key", "left_anti")
             .unionByName(improved)
-            .localCheckpoint()
         )
         frontier = improved
     return arrive
@@ -1684,7 +1485,7 @@ def closeness_approx(
     frontier DataFrame.
     """
     key_col = nodes.columns[0]
-    verts = nodes.select(F.col(key_col).alias("key")).distinct().localCheckpoint()
+    verts, _ = materialize(nodes.select(F.col(key_col).alias("key")).distinct())
     n_vertices = verts.count()
     pivots = [
         r["key"]
@@ -1694,31 +1495,31 @@ def closeness_approx(
         .collect()
     ]
     spark = edges.sparkSession
-    e = (edges.select("src", "dst") if directed else _as_undirected(edges)).localCheckpoint()
+    e, _ = materialize(
+        edges.select("src", "dst") if directed else _as_undirected(edges)
+    )
     # ONE tagged multi-source BFS: frontier rows carry their pivot, so
     # all k sweeps advance together — k× fewer rounds/jobs than looping
     # pivots, and each round is still a single co-partitioned join
-    visited = (
+    visited, _ = materialize(
         spark.createDataFrame([(p,) for p in pivots], ["pivot"])
         .select("pivot", F.col("pivot").alias("key"))
         .withColumn("dist", F.lit(0))
-        .localCheckpoint()
     )
     frontier = visited
     hop = 0
     while hop < max_hops:
         hop += 1
-        nxt = (
+        nxt, _ = materialize(
             frontier.join(e, frontier["key"] == e["src"])
             .select("pivot", F.col("dst").alias("key"))
             .distinct()
             .join(visited.select("pivot", "key"), ["pivot", "key"], "left_anti")
             .withColumn("dist", F.lit(hop))
-            .localCheckpoint()
         )
         if nxt.isEmpty():
             break
-        visited = visited.unionByName(nxt).localCheckpoint()
+        visited, _ = materialize(visited.unionByName(nxt))
         frontier = nxt
     scale = float(n_vertices) / float(len(pivots)) if pivots else 0.0
     summed = (
@@ -1756,7 +1557,7 @@ def pagerank_weighted(
         )
     else:
         verts = nodes.select(F.col(nodes.columns[0]).alias("key")).distinct()
-    verts = verts.localCheckpoint()
+    verts, _ = materialize(verts)
     # same layout discipline as pagerank: one up-front src exchange
     # reused by the out-weight aggregate, the join back, and the
     # checkpointed per-round layout (same no-per-round-broadcast
@@ -1768,10 +1569,9 @@ def pagerank_weighted(
     out_w = e_p.groupBy(F.col("src").alias("key")).agg(
         F.sum("w").alias("out_w")
     )
-    links = (
+    links, _ = materialize(
         e_p.join(out_w, e_p["src"] == out_w["key"])
         .select("src", "dst", (F.col("w") / F.col("out_w")).alias("frac"))
-        .localCheckpoint()
     )
     ranks = verts.withColumn("rank", F.lit(1.0))
     for _ in range(iterations):
@@ -1784,7 +1584,7 @@ def pagerank_weighted(
             .groupBy("key")
             .agg(F.sum("contrib").alias("contrib"))
         )
-        ranks = (
+        ranks, _ = materialize(
             verts.join(contribs, "key", "left")
             .select(
                 "key",
@@ -1792,7 +1592,6 @@ def pagerank_weighted(
                  + F.lit(damping) * F.coalesce(F.col("contrib"), F.lit(0.0))
                  ).alias("rank"),
             )
-            .localCheckpoint()
         )
     return ranks
 
@@ -1816,24 +1615,22 @@ def densest_subgraph(
     the degree table (|E| = Σdeg/2 by the handshake lemma) — no
     separate edge count / vertex count / emptiness probe.
     """
-    und = (
+    und, _ = materialize(
         edges.select(
             F.least("src", "dst").alias("src"), F.greatest("src", "dst").alias("dst")
         )
         .filter(F.col("src") != F.col("dst"))
         .distinct()
-        .localCheckpoint()
     )
     cur_edges = und
     best_verts: DataFrame | None = None
     best_density = -1.0
     for _ in range(max_iter):
-        deg = (
+        deg, _ = materialize(
             cur_edges.select(F.col("src").alias("key"))
             .unionByName(cur_edges.select(F.col("dst").alias("key")))
             .groupBy("key")
             .agg(F.count("*").alias("deg"))
-            .localCheckpoint()
         )
         stats = deg.agg(
             F.count("*").alias("n_v"), F.sum("deg").alias("sum_deg")
@@ -1850,11 +1647,10 @@ def densest_subgraph(
         # peel: strictly fewer vertices survive every round (not every
         # degree can exceed (1+eps) x the average), so an empty keep set
         # simply yields an empty degree table next round
-        keep = deg.filter(F.col("deg") > threshold).select("key").localCheckpoint()
-        cur_edges = (
+        keep, _ = materialize(deg.filter(F.col("deg") > threshold).select("key"))
+        cur_edges, _ = materialize(
             cur_edges.join(keep.withColumnRenamed("key", "src"), "src", "left_semi")
             .join(keep.withColumnRenamed("key", "dst"), "dst", "left_semi")
-            .localCheckpoint()
         )
     if best_verts is None:
         spark = edges.sparkSession
@@ -1877,14 +1673,13 @@ def four_clique_count(edges: DataFrame) -> DataFrame:
     which AQE can broadcast when the graph is small and which should be
     pre-bucketed by src at 100 TB.
     """
-    e = (
+    e, _ = materialize(
         _as_undirected(edges)
         .select(
             F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
         )
         .filter(F.col("a") != F.col("b"))
         .distinct()
-        .localCheckpoint()
     )
     ab = e.select(F.col("a"), F.col("b"))
     bc = e.select(F.col("a").alias("b2"), F.col("b").alias("c"))
@@ -1978,7 +1773,7 @@ def minimum_spanning_forest(
     component; the label table is the only state.  At 100 TB bucket
     the edge list by src so the label joins co-locate.
     """
-    e = (
+    e, _ = materialize(
         edges.select(
             F.least("src", "dst").alias("u"),
             F.greatest("src", "dst").alias("v"),
@@ -1987,17 +1782,15 @@ def minimum_spanning_forest(
         .filter(F.col("u") != F.col("v"))
         .groupBy("u", "v")
         .agg(F.min("w").alias("w"))
-        .localCheckpoint()
     )
-    labels = (
+    labels, _ = materialize(
         e.select(F.col("u").alias("key"))
         .unionByName(e.select(F.col("v").alias("key")))
         .distinct()
         .withColumn("c", F.col("key"))
-        .localCheckpoint()
     )
     spark = edges.sparkSession
-    forest = spark.createDataFrame([], e.schema).localCheckpoint()
+    forest, _ = materialize(spark.createDataFrame([], e.schema))
     for _ in range(max_iter):
         el = (
             e.join(labels.select(F.col("key").alias("u"), F.col("c").alias("cu")), "u")
@@ -2008,17 +1801,16 @@ def minimum_spanning_forest(
         cand = el.select(F.col("cu").alias("component"), pick.alias("s")).unionByName(
             el.select(F.col("cv").alias("component"), pick.alias("s"))
         )
-        chosen = (
+        chosen, _ = materialize(
             cand.groupBy("component")
             .agg(F.min("s").alias("s"))
             .select("s.u", "s.v", "s.w", "s.cu", "s.cv")
-            .localCheckpoint()
         )
         if chosen.isEmpty():
             break
-        forest = forest.unionByName(
+        forest, _ = materialize(forest.unionByName(
             chosen.select("u", "v", "w").distinct()
-        ).localCheckpoint()
+        ))
         # contract the component graph (two-phase: O(log n) rounds even
         # for chain-shaped merge patterns)
         cedges = chosen.select(F.col("cu").alias("src"), F.col("cv").alias("dst"))
@@ -2026,10 +1818,9 @@ def minimum_spanning_forest(
         cmap = connected_components_twophase(cnodes, cedges).select(
             F.col("key").alias("c"), F.col("component").alias("c_new")
         )
-        labels = (
+        labels, _ = materialize(
             labels.join(cmap, "c", "left")
             .select("key", F.coalesce(F.col("c_new"), F.col("c")).alias("c"))
-            .localCheckpoint()
         )
     return forest
 
@@ -2062,7 +1853,7 @@ def shortest_path_length_bidirectional(
     rev = e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
 
     def new_side(key):
-        v = spark.createDataFrame([(key, 0)], ["key", "dist"]).localCheckpoint()
+        v, _ = materialize(spark.createDataFrame([(key, 0)], ["key", "dist"]))
         return {"visited": v, "frontier": v, "depth": 0, "alive": True}
 
     fwd, bwd = new_side(src_key), new_side(dst_key)
@@ -2077,13 +1868,12 @@ def shortest_path_length_bidirectional(
         )
         if not side["alive"]:
             break
-        nxt = (
+        nxt, _ = materialize(
             side["frontier"].join(graph, side["frontier"]["key"] == graph["src"])
             .select(F.col("dst").alias("key"))
             .distinct()
             .join(side["visited"].select("key"), "key", "left_anti")
             .withColumn("dist", F.lit(side["depth"] + 1))
-            .localCheckpoint()
         )
         side["depth"] += 1
         if nxt.isEmpty():
@@ -2091,7 +1881,7 @@ def shortest_path_length_bidirectional(
             if not fwd["alive"] and not bwd["alive"]:
                 break
         else:
-            side["visited"] = side["visited"].unionByName(nxt).localCheckpoint()
+            side["visited"], _ = materialize(side["visited"].unionByName(nxt))
             side["frontier"] = nxt
         meet = (
             fwd["visited"].alias("f")
@@ -2143,11 +1933,10 @@ def shortest_path_bidirectional(
     key_t = e.schema["src"].dataType
 
     def new_side(key):
-        v = (
+        v, _ = materialize(
             spark.createDataFrame([(key, 0)], ["key", "dist"])
             .select(F.col("key").cast(key_t).alias("key"), "dist")
             .withColumn("pred", F.lit(None).cast(key_t))
-            .localCheckpoint()
         )
         return {"visited": v, "frontier": v, "depth": 0, "alive": True}
 
@@ -2162,7 +1951,7 @@ def shortest_path_bidirectional(
         )
         if not side["alive"]:
             break
-        nxt = (
+        nxt, _ = materialize(
             side["frontier"].join(graph, side["frontier"]["key"] == graph["src"])
             .select(F.col("dst").alias("key"), side["frontier"]["key"].alias("pred"))
             .groupBy("key")
@@ -2170,7 +1959,6 @@ def shortest_path_bidirectional(
             .join(side["visited"].select("key"), "key", "left_anti")
             .withColumn("dist", F.lit(side["depth"] + 1))
             .select("key", "dist", "pred")
-            .localCheckpoint()
         )
         side["depth"] += 1
         if nxt.isEmpty():
@@ -2178,7 +1966,7 @@ def shortest_path_bidirectional(
             if not fwd["alive"] and not bwd["alive"]:
                 break
         else:
-            side["visited"] = side["visited"].unionByName(nxt).localCheckpoint()
+            side["visited"], _ = materialize(side["visited"].unionByName(nxt))
             side["frontier"] = nxt
         meet = (
             fwd["visited"].alias("f")
@@ -2259,12 +2047,12 @@ def hyperball(
     )
 
     e = edges.select("src", "dst") if directed else _as_undirected(edges)
-    e = e.distinct().localCheckpoint()
+    e, _ = materialize(e.distinct())
     nodes = e.select(F.col("src").alias("key")).union(
         e.select(F.col("dst").alias("key"))
     ).distinct()
     bucket, rho = hll_bucket_rho(F.col("key"))
-    state = nodes.select("key", bucket, rho.alias("reg")).localCheckpoint()
+    state, _ = materialize(nodes.select("key", bucket, rho.alias("reg")))
     frontier = state
 
     def _nf_row(st: DataFrame):
@@ -2327,7 +2115,7 @@ def hyperball(
             F.col("bucket").alias("s_bucket"),
             F.col("reg").alias("old"),
         )
-        improved = (
+        improved, _ = materialize(
             cand.join(
                 old,
                 (cand["key"] == old["s_key"])
@@ -2336,15 +2124,13 @@ def hyperball(
             )
             .filter(F.col("old").isNull() | (F.col("reg") > F.col("old")))
             .select("key", "bucket", "reg")
-            .localCheckpoint()
         )
         if improved.isEmpty():
             break
-        state = (
+        state, _ = materialize(
             state.unionByName(improved)
             .groupBy("key", "bucket")
             .agg(F.max("reg").alias("reg"))
-            .localCheckpoint()
         )
         frontier = improved
         out.append({"t": t, **_nf_row(state)})
@@ -2456,12 +2242,11 @@ def hits(
     """
     if iters < 1:
         raise ValueError(f"hits() needs iters >= 1, got {iters}")
-    e = edges.select("src", "dst").distinct().localCheckpoint()
-    nodes = (
+    e, _ = materialize(edges.select("src", "dst").distinct())
+    nodes, _ = materialize(
         e.select(F.col("src").alias("v"))
         .union(e.select(F.col("dst").alias("v")))
         .distinct()
-        .localCheckpoint()
     )
     h = nodes.withColumn("h", F.lit(int(scale)).cast("bigint"))
     a = None
@@ -2472,7 +2257,7 @@ def hits(
             .agg(F.sum("h").alias("raw"))
         )
         a_tot = a_raw.agg(F.sum("raw").alias("tot"))
-        a = (
+        a, _ = materialize(
             nodes.join(a_raw, nodes["v"] == a_raw["av"], "left")
             .crossJoin(a_tot)  # 1x1 scalar join, broadcast by AQE
             .select(
@@ -2484,7 +2269,6 @@ def hits(
                 .cast("bigint")
                 .alias("a"),
             )
-            .localCheckpoint()
         )
         h_raw = (
             e.join(a, a["v"] == e["dst"])
@@ -2492,7 +2276,7 @@ def hits(
             .agg(F.sum("a").alias("raw"))
         )
         h_tot = h_raw.agg(F.sum("raw").alias("tot"))
-        h = (
+        h, _ = materialize(
             nodes.join(h_raw, nodes["v"] == h_raw["hv"], "left")
             .crossJoin(h_tot)
             .select(
@@ -2504,7 +2288,6 @@ def hits(
                 .cast("bigint")
                 .alias("h"),
             )
-            .localCheckpoint()
         )
     return (
         nodes.join(h, "v", "left")
@@ -2587,9 +2370,8 @@ def louvain_one_level(
     100 TB shape per round: one join edge×assignment (shuffle on the
     edge key), one (v, C) hash-agg, one community-degree hash-agg
     (broadcast back — #communities ≤ #nodes and shrinks fast), one
-    argmax per node via max_by.  Assignment is localCheckpointed per
-    round (iterative-operator discipline; swap for checkpoint() on a
-    cluster).
+    argmax per node via max_by.  Assignment is frozen per round with a
+    reliable checkpoint (see :func:`_louvain_local_moving`).
     """
     if prepartitioned:
         # ``edges`` IS the undirected weighted frame in the per-round
@@ -2604,7 +2386,7 @@ def louvain_one_level(
     # the CACHE lands already in the per-round join layout — one 2|E|
     # shuffle total, and (unlike a checkpoint) the cache's
     # partitioning/ordering metadata stays visible to every round's
-    # plan (partitioned_cache)
+    # plan (materialize's layout mode)
     und = louvain_undirected_edges(edges, edges_distinct).persist()
     # no eager count: the kernel's first aggregate (ideg) materializes
     # the cache as a side effect of a job it runs anyway
@@ -2637,19 +2419,17 @@ def maximal_independent_set(
     driver sees only the loop counter and emptiness probes.
     """
     key_col = nodes.columns[0]
-    und = (
+    und, _ = materialize(
         _as_undirected(edges)
         .filter(F.col("src") != F.col("dst"))
         .distinct()
-        .localCheckpoint()
     )
-    act = (
+    act, _ = materialize(
         nodes.select(F.col(key_col).alias("v")).distinct()
         .withColumn("pri", F.md5(F.col("v")))
-        .localCheckpoint()
     )
     spark = nodes.sparkSession
-    mis = spark.createDataFrame([], "v string").localCheckpoint()
+    mis, _ = materialize(spark.createDataFrame([], "v string"))
     for _ in range(max_iter):
         if act.isEmpty():
             break
@@ -2665,24 +2445,22 @@ def maximal_independent_set(
             .groupBy(F.col("src").alias("v"))
             .agg(F.min(F.struct(F.col("npri"), F.col("dst"))).alias("nm"))
         )
-        winners = (
+        winners, _ = materialize(
             act.join(nbr_min, "v", "left")
             .filter(
                 F.col("nm").isNull()
                 | (F.struct(F.col("pri"), F.col("v")) < F.col("nm"))
             )
             .select("v")
-            .localCheckpoint()
         )
-        mis = mis.unionByName(winners).localCheckpoint()
+        mis, _ = materialize(mis.unionByName(winners))
         nbrs = (
             e_act.join(winners.select(F.col("v").alias("src")), "src", "left_semi")
             .select(F.col("dst").alias("v"))
             .distinct()
         )
-        act = (
+        act, _ = materialize(
             act.join(winners.unionByName(nbrs), "v", "left_anti")
-            .localCheckpoint()
         )
     return mis
 
@@ -2708,30 +2486,27 @@ def greedy_coloring(
     count is (Δ+1)-bounded like any greedy scheme.
     """
     key_col = nodes.columns[0]
-    und = (
+    und, _ = materialize(
         _as_undirected(edges)
         .filter(F.col("src") != F.col("dst"))
         .distinct()
-        .localCheckpoint()
     )
-    pending = (
+    pending, _ = materialize(
         nodes.select(F.col(key_col).alias("v")).distinct()
-        .localCheckpoint()
     )
     pri = pending.withColumn(
         "pri", F.struct(F.md5(F.col("v")).alias("h"), F.col("v"))
     )
     # the priority-dominance graph (dst outranks src) is STATIC —
     # computed once; each round only membership changes
-    dom = (
+    dom, _ = materialize(
         und.join(pri.select(F.col("v").alias("src"), "pri"), "src")
         .join(pri.select(F.col("v").alias("dst"), F.col("pri").alias("dpri")), "dst")
         .filter(F.col("dpri") < F.col("pri"))
         .select("src", "dst")
-        .localCheckpoint()
     )
     spark = nodes.sparkSession
-    colored = spark.createDataFrame([], "v string, color int").localCheckpoint()
+    colored, _ = materialize(spark.createDataFrame([], "v string, color int"))
     for _ in range(max_iter):
         if pending.isEmpty():
             break
@@ -2756,16 +2531,15 @@ def greedy_coloring(
             F.lit(0),
             lambda acc, c: F.when(c == acc, acc + 1).otherwise(acc),
         )
-        newly = (
+        newly, _ = materialize(
             ready.join(nb_colors, "v", "left")
             .select(
                 "v",
                 F.coalesce(mex, F.lit(0)).cast("int").alias("color"),
             )
-            .localCheckpoint()
         )
-        colored = colored.unionByName(newly).localCheckpoint()
-        pending = pending.join(newly.select("v"), "v", "left_anti").localCheckpoint()
+        colored, _ = materialize(colored.unionByName(newly))
+        pending, _ = materialize(pending.join(newly.select("v"), "v", "left_anti"))
     return colored
 
 
@@ -2788,7 +2562,7 @@ def greedy_matching(edges: DataFrame, max_iter: int = 50) -> DataFrame:
     so reruns and the pure-Python oracle agree edge-for-edge
     (tests/test_traversal.py).
     """
-    und = (
+    und, _ = materialize(
         _as_undirected(edges)
         .filter(F.col("src") < F.col("dst"))
         .distinct()
@@ -2797,7 +2571,6 @@ def greedy_matching(edges: DataFrame, max_iter: int = 50) -> DataFrame:
             "dst",
             F.md5(F.concat_ws("|", "src", "dst")).alias("pri"),
         )
-        .localCheckpoint()
     )
     matched_edges = None
     for _ in range(max_iter):
@@ -2811,27 +2584,25 @@ def greedy_matching(edges: DataFrame, max_iter: int = 50) -> DataFrame:
         pick = incid.groupBy("v").agg(
             F.min(F.struct("pri", "src", "dst")).alias("e")
         ).select("v", F.col("e.src").alias("src"), F.col("e.dst").alias("dst"))
-        handshake = (
+        handshake, _ = materialize(
             pick.groupBy("src", "dst")
             .agg(F.count("*").alias("n"))
             .filter(F.col("n") == 2)
             .select("src", "dst")
-            .localCheckpoint()
         )
         if handshake.isEmpty():
             break
         matched_edges = (
             handshake
             if matched_edges is None
-            else matched_edges.unionByName(handshake).localCheckpoint()
+            else materialize(matched_edges.unionByName(handshake))[0]
         )
         mv = handshake.select(F.col("src").alias("v")).unionByName(
             handshake.select(F.col("dst").alias("v"))
         ).distinct()
-        und = (
+        und, _ = materialize(
             und.join(mv.select(F.col("v").alias("src")), "src", "left_anti")
             .join(mv.select(F.col("v").alias("dst")), "dst", "left_anti")
-            .localCheckpoint()
         )
     if matched_edges is None:
         return edges.sparkSession.createDataFrame([], "src string, dst string")
@@ -2854,12 +2625,11 @@ def local_clustering(edges: DataFrame) -> DataFrame:
     the projection is dense.  Toy-fixture semantics (triangle+pendant:
     1.0 / 0.333… / 0) pinned in tests/test_traversal.py.
     """
-    e = (
+    e, _ = materialize(
         _as_undirected(edges)
         .filter(F.col("src") < F.col("dst"))
         .distinct()
         .select(F.col("src").alias("u"), F.col("dst").alias("v"))
-        .localCheckpoint()
     )
     und = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
     deg = und.groupBy("u").agg(F.count("*").alias("d"))
@@ -2887,13 +2657,6 @@ def local_clustering(edges: DataFrame) -> DataFrame:
     )
 
 
-def _dst_partitioned_cache(und: DataFrame) -> DataFrame:
-    """Cache the bidirectional edge table hash-partitioned AND sorted
-    on ``dst`` — the metadata-visible layout every local-moving round
-    joins on (see :func:`partitioned_cache`).  Caller unpersists."""
-    return partitioned_cache(und, "dst")
-
-
 def _louvain_local_moving(
     und: DataFrame,
     loops: DataFrame | None,
@@ -2912,7 +2675,7 @@ def _louvain_local_moving(
     quiet rounds (one per direction).
 
     The edge table arrives hash-partitioned and sorted on ``dst`` in a
-    CACHE (callers use :func:`partitioned_cache`), whose
+    CACHE (``order.materialize(..., mode="layout")``), whose
     InMemoryRelation keeps the layout metadata visible to Catalyst —
     so every round's edge×assignment join plans ZERO exchange and ZERO
     sort on the edge side and moves only the vertex-sized assignment.
@@ -2938,20 +2701,6 @@ def _louvain_local_moving(
     of a broadcast vertex state is exactly the memory blow-up the
     co-partitioned joins avoid.
     """
-    # this loop shape NEEDS a hard freeze (see rdd_freeze docstring).
-    # Default since r6: JVM-side reliable Dataset.checkpoint
-    # (df_freeze) — the r5 Python-RDD freeze piped the vertex state
-    # through Python workers on every materialization and every
-    # downstream read (~4x/round); swapping it measured warm exec
-    # 108.5s -> 87.0s (-20%) and warm wall 11.75 -> 10.37s on the
-    # sf0.1 copurchase graph, cold exec neutral (181 -> 175s),
-    # assignment bit-identical.  "rdd" kept as an env fallback for
-    # A/B and for environments without a writable checkpoint dir.
-    import os as _os
-
-    _mode = _os.environ.get("SPARK_GRAFT_LOUVAIN_FREEZE", "checkpoint")
-    _freeze = df_freeze if _mode == "checkpoint" else rdd_freeze
-
     ideg = und.groupBy(F.col("src").alias("v")).agg(
         F.sum("w").cast("bigint").alias("ideg")
     )
@@ -2966,7 +2715,7 @@ def _louvain_local_moving(
                 ).cast("bigint").alias("ideg"),
             )
         )
-    nodes = ideg.select("v", F.col("ideg").alias("deg")).localCheckpoint()
+    nodes, _ = materialize(ideg.select("v", F.col("ideg").alias("deg")))
     s_total = nodes.agg(F.sum("deg")).collect()[0][0] or 0
     # node-sized frames broadcast only while they are actually small
     # (see docstring); identity above the gate
@@ -3020,7 +2769,20 @@ def _louvain_local_moving(
     # ADD two joins (encode at entry, decode at exit) plus a dense-id
     # assignment shuffle per level.  Nothing on the profile charges to
     # key width; skip unless rows ever become array-indexed.
-    asg, asg_rdd = _freeze(nodes.select("v", F.col("v").alias("c")))
+
+    # this loop shape NEEDS a reliable freeze: ``localCheckpoint`` is
+    # unreliable under AQE when the per-round state is referenced
+    # several times in the next round's plan (~4x here) — the
+    # checkpoint marker can land on a pre-replan RDD whose full lineage
+    # is retained, so round cost compounds (measured 0.7s -> 67s over 8
+    # rounds).  The simpler loops (pagerank, LPA, k-core, HashMin) were
+    # probed flat at 4-20 rounds with ``local``.  The reliable
+    # checkpoint writes the final post-AQE RDD JVM-side; the
+    # Python-RDD freeze it replaced measured warm exec 108.5s -> 87.0s
+    # on the sf0.1 copurchase graph, assignment bit-identical.
+    asg, _ = materialize(
+        nodes.select("v", F.col("v").alias("c")), mode="reliable"
+    )
 
     quiet_streak = 0
     for it in range(max_iter):
@@ -3115,15 +2877,10 @@ def _louvain_local_moving(
             .alias("c"),
             F.col("b.c_cur").alias("c_old"),
         )
-        # moved-count folds into the freeze's own materialization job
-        if _mode == "checkpoint":
-            nxt, asg_rdd, n_moved = df_freeze_counting(
-                pre, F.col("c") != F.col("c_old"), asg_rdd
-            )
-        else:
-            nxt, asg_rdd, n_moved = rdd_freeze_counting(
-                pre, lambda r: r["c"] != r["c_old"], asg_rdd
-            )
+        # moved-count runs JVM-side off the frozen rows (reliable
+        # freeze: see above)
+        nxt, _ = materialize(pre, mode="reliable")
+        n_moved = nxt.filter(F.col("c") != F.col("c_old")).count()
         asg = nxt.select("v", "c")
         quiet_streak = quiet_streak + 1 if n_moved == 0 else 0
         if quiet_streak >= 2:
@@ -3152,8 +2909,8 @@ def louvain(
     100 TB shape: each level shrinks the graph (typically sharply
     after level 1), so cost is dominated by level 0 — the same
     per-round joins as :func:`louvain_one_level`; the aggregation
-    itself is one join + two hash-aggs.  localCheckpoint per level
-    bounds lineage.
+    itself is one join + two hash-aggs.  A freeze per level bounds
+    lineage.
     """
     if weight_col is None:
         base = (
@@ -3200,14 +2957,15 @@ def louvain(
         asg = _louvain_local_moving(und, loops, max_iter)
         n_nodes = asg.count()
         n_comms = asg.select("c").distinct().count()
-        mapping = (
-            asg
-            if mapping is None
-            else mapping.join(
-                asg.select(F.col("v").alias("c"), F.col("c").alias("c_new")),
-                "c",
-            ).select("v", F.col("c_new").alias("c")).localCheckpoint()
-        )
+        if mapping is None:
+            mapping = asg
+        else:
+            mapping, _ = materialize(
+                mapping.join(
+                    asg.select(F.col("v").alias("c"), F.col("c").alias("c_new")),
+                    "c",
+                ).select("v", F.col("c_new").alias("c"))
+            )
         if n_comms == n_nodes:
             break
         # aggregate: project edges onto communities
@@ -3216,10 +2974,12 @@ def louvain(
             .join(asg.select(F.col("v").alias("dst"), F.col("c").alias("cd")), "dst")
             .select("cs", "cd", "w")
         )
-        new_und = _dst_partitioned_cache(
+        new_und, _ = materialize(
             proj.filter(F.col("cs") != F.col("cd"))
             .groupBy(F.col("cs").alias("src"), F.col("cd").alias("dst"))
-            .agg(F.sum("w").cast("bigint").alias("w"))
+            .agg(F.sum("w").cast("bigint").alias("w")),
+            mode="layout",
+            key="dst",
         )
         intra = (
             proj.filter(F.col("cs") == F.col("cd"))
@@ -3240,9 +3000,9 @@ def louvain(
             .groupBy("v")
             .agg(F.sum("loop_w").cast("bigint").alias("loop_w"))
         )
-        loops = new_loops.localCheckpoint()
-        # new_und (persist+count) and loops (eager localCheckpoint) are
-        # both materialized — the previous level's cache can go
+        loops, _ = materialize(new_loops)
+        # new_und (layout cache) and loops (local freeze) are both
+        # materialized — the previous level's cache can go
         und.unpersist()
         und = new_und
         if und.isEmpty():
@@ -3273,32 +3033,31 @@ def topological_levels(
     contraction first.
     """
     key_col = nodes.columns[0]
-    verts = nodes.select(F.col(key_col).alias("v")).distinct().localCheckpoint()
-    e = (
+    verts, _ = materialize(nodes.select(F.col(key_col).alias("v")).distinct())
+    e, _ = materialize(
         edges.select("src", "dst")
         .filter(F.col("src") != F.col("dst"))
         .distinct()
         .join(verts.select(F.col("v").alias("src")), "src", "left_semi")
         .join(verts.select(F.col("v").alias("dst")), "dst", "left_semi")
-        .localCheckpoint()
     )
     spark = nodes.sparkSession
-    out = spark.createDataFrame([], "v string, level int").localCheckpoint()
+    out, _ = materialize(spark.createDataFrame([], "v string, level int"))
     remaining = verts
     for level in range(max_iter):
         if remaining.isEmpty():
             break
         has_incoming = e.select(F.col("dst").alias("v")).distinct()
-        frontier = remaining.join(has_incoming, "v", "left_anti").localCheckpoint()
+        frontier, _ = materialize(remaining.join(has_incoming, "v", "left_anti"))
         if frontier.isEmpty():
             break  # every remaining vertex sits on/behind a cycle
-        out = out.unionByName(
+        out, _ = materialize(out.unionByName(
             frontier.withColumn("level", F.lit(level))
-        ).localCheckpoint()
-        remaining = remaining.join(frontier, "v", "left_anti").localCheckpoint()
-        e = e.join(
+        ))
+        remaining, _ = materialize(remaining.join(frontier, "v", "left_anti"))
+        e, _ = materialize(e.join(
             frontier.select(F.col("v").alias("src")), "src", "left_anti"
-        ).localCheckpoint()
+        ))
     # cycle residue: unpeelable vertices, level NULL
     return verts.join(out, "v", "left").select("v", "level")
 
@@ -3327,24 +3086,24 @@ def harmonic_centrality_exact(
     Vertices are the endpoints of ``edges`` (both directions when
     ``directed=False``).
     """
-    e = (edges.select("src", "dst") if directed else _as_undirected(edges)).localCheckpoint()
-    verts = (
+    e, _ = materialize(
+        edges.select("src", "dst") if directed else _as_undirected(edges)
+    )
+    verts, _ = materialize(
         e.select(F.col("src").alias("key"))
         .unionByName(e.select(F.col("dst").alias("key")))
         .distinct()
-        .localCheckpoint()
     )
-    visited = (
+    visited, _ = materialize(
         verts.select(F.col("key").alias("pivot"))
         .select("pivot", F.col("pivot").alias("key"))
         .withColumn("dist", F.lit(0))
-        .localCheckpoint()
     )
     frontier = visited
     hop = 0
     while hop < max_hops:
         hop += 1
-        nxt = (
+        nxt, _ = materialize(
             frontier.join(e, frontier["key"] == e["src"])
             .select("pivot", F.col("dst").alias("key"))
             .distinct()
@@ -3352,11 +3111,10 @@ def harmonic_centrality_exact(
                 visited.select("pivot", "key"), ["pivot", "key"], "left_anti"
             )
             .withColumn("dist", F.lit(hop))
-            .localCheckpoint()
         )
         if nxt.isEmpty():
             break
-        visited = visited.unionByName(nxt).localCheckpoint()
+        visited, _ = materialize(visited.unionByName(nxt))
         frontier = nxt
     return (
         visited.filter(F.col("dist") > 0)

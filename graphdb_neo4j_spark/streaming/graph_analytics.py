@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from graphdb_neo4j_spark.operators.order import materialize
+
 _EMPTY_SCHEMA = "v string, component string"
 
 
@@ -120,21 +122,19 @@ def streaming_connected_components(
         spark = batch_df.sparkSession
         if batch_id in _done_batches(spark, f"{state_path}/meta"):
             return
-        e = (
+        e, _ = materialize(
             batch_df.select(
                 F.col(src_col).cast("string").alias("src"),
                 F.col(dst_col).cast("string").alias("dst"),
             )
             .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
             .distinct()
-            .localCheckpoint()
         )
-        bverts = (
+        bverts, _ = materialize(
             e.select(F.col("src").alias("v"))
             .unionByName(e.select(F.col("dst").alias("v")))
             .distinct()
             .withColumn("shard", _shard_of(F.col("v"), n_shards))
-            .localCheckpoint()
         )
         bshards = {r.shard for r in bverts.select("shard").distinct().collect()}
         # prior state for the batch's vertices only — a partition-pruned
@@ -164,11 +164,13 @@ def streaming_connected_components(
         # component ids are min member ids; since prior component ids
         # are min vertex ids of their sets, the merged min is the
         # global min vertex — batch-equivalent by induction.
-        merged = connected_components(cnodes, contracted).localCheckpoint()
+        merged, _ = materialize(connected_components(cnodes, contracted))
         # CHANGED component ids only: old component c now maps to m ≠ c
-        mapping = merged.filter(F.col("key") != F.col("component")).select(
-            F.col("key").alias("component"), F.col("component").alias("m")
-        ).localCheckpoint()
+        mapping, _ = materialize(
+            merged.filter(F.col("key") != F.col("component")).select(
+                F.col("key").alias("component"), F.col("component").alias("m")
+            )
+        )
         new_verts = bverts.join(prior_b.select("v"), "v", "left_anti")
         # touched shards = shards holding a CHANGED component (one-column
         # scan of the latest state: shard is a partition col) ∪ shards of
@@ -295,7 +297,7 @@ def streaming_triangle_count(
             prev_total = row["total"] if row else 0
         else:
             old = spark.createDataFrame([], "u string, v string")
-        new_e = new_raw.join(old, ["u", "v"], "left_anti").localCheckpoint()
+        new_e, _ = materialize(new_raw.join(old, ["u", "v"], "left_anti"))
         # adjacency with each edge's order key: old edges sort below all
         # new edges; new edges order by canonical (u, v)
         okey = lambda n, u, v: F.struct(  # noqa: E731

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from graphdb_neo4j_spark.operators.ingest import PropertyGraph, build_graph_from_spans
+from graphdb_neo4j_spark.operators.order import materialize
 from graphdb_neo4j_spark.sources.jaeger import TRACE_SCHEMA, read_spans, read_traces
 
 
@@ -393,10 +394,9 @@ def streaming_neardup_dedup(
         # a NULL token array); such docs must still flow through — they
         # dedup among themselves under the sentinel signature, never
         # silently vanish
-        keyed = (
+        keyed, _ = materialize(
             docs.join(sigs.withColumnRenamed("id", id_col), id_col, "left")
             .withColumn("simhash", F.coalesce(F.col("simhash"), F.lit("")))
-            .localCheckpoint()
         )
         # a signature expires once the batch's max event time passes
         # last_seen + delay — dropDuplicatesWithinWatermark's contract;
@@ -414,7 +414,7 @@ def streaming_neardup_dedup(
 
         firsts = group_argmin(keyed, ["simhash"], ["__ts_us", id_col])
         kept = firsts.join(prior.select("simhash"), "simhash", "left_anti")
-        kept = kept.localCheckpoint()
+        kept, _ = materialize(kept)
         # new horizon-pruned snapshot: every signature seen recently
         seen = (
             prior.unionByName(

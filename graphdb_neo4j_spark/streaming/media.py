@@ -110,8 +110,8 @@ def streaming_fingerprint_neardup(
             hamming_neardup_pairs,
         )
         from graphdb_neo4j_spark.operators.order import (
-            checkpoint_eager,
             group_argmin,
+            materialize,
         )
         from graphdb_neo4j_spark.operators.traversal import (
             connected_components,
@@ -132,7 +132,7 @@ def streaming_fingerprint_neardup(
         # end of batch, never accumulate across a long-lived stream):
         # when hashing in-batch this is what makes the Arrow decode
         # pass run ONCE (the q225 single-decode discipline)
-        batch, batch_handle = checkpoint_eager(
+        batch, batch_handle = materialize(
             batch.filter(F.col(hash_col).isNotNull())
         )
         try:
@@ -168,7 +168,7 @@ def streaming_fingerprint_neardup(
             # of its three consumers — the in-batch LSH's checkpoint,
             # the component loop's node freeze, and the keeper pick
             # (r10 review); the batch freeze alone does not cover it
-            new, new_handle = checkpoint_eager(
+            new, new_handle = materialize(
                 batch.join(hit, id_col, "left_anti")
             )
             batch_handle.release()  # batch fully consumed by `new`
@@ -196,7 +196,7 @@ def streaming_fingerprint_neardup(
         )
         # freeze before writing the path the lineage anti-joined
         # (handled — released after the meta commit)
-        kept, kept_handle = checkpoint_eager(
+        kept, kept_handle = materialize(
             group_argmin(
                 labeled,
                 ["component"],

@@ -585,12 +585,12 @@ def test_q154_pipeline_broadcasts_eval_grams_no_cartesian(spark):
 
 
 def test_checkpoint_eager_reliable_flag_switches_plan(spark):
-    """r11 freeze recovery contract: checkpoint_eager(reliable=True)
-    must freeze via an eager RELIABLE Dataset.checkpoint (survives
-    executor loss; no executor-local persisted blocks) while the
-    default stays localCheckpoint (one persisted RDD, released by the
-    handle).  Values identical either way."""
-    from graphdb_neo4j_spark.operators.order import checkpoint_eager
+    """Freeze recovery contract: materialize(mode="reliable") must
+    freeze via an eager RELIABLE Dataset.checkpoint (survives executor
+    loss; no executor-local persisted blocks) while the default mode
+    stays localCheckpoint (one persisted RDD, released by the handle).
+    Values identical either way."""
+    from graphdb_neo4j_spark.operators.order import materialize
 
     def persistent_ids() -> set[int]:
         jmap = spark.sparkContext._jsc.sc().getPersistentRDDs()
@@ -603,14 +603,14 @@ def test_checkpoint_eager_reliable_flag_switches_plan(spark):
     df = spark.range(100).withColumn("v", F.col("id") * 2)
 
     before = persistent_ids()
-    loc, lh = checkpoint_eager(df)
+    loc, lh = materialize(df)
     assert persistent_ids() - before, "local freeze must persist blocks"
     node = loc._jdf.queryExecution().analyzed()
     assert node.nodeName() == "LogicalRDD"
     assert node.rdd().isLocallyCheckpointed()
 
     before = persistent_ids()
-    rel, rh = checkpoint_eager(df, reliable=True)
+    rel, rh = materialize(df, mode="reliable")
     assert not (persistent_ids() - before), (
         "reliable freeze must not hold executor-local persisted blocks"
     )
@@ -621,6 +621,71 @@ def test_checkpoint_eager_reliable_flag_switches_plan(spark):
     assert sorted(map(tuple, rel.collect())) == sorted(map(tuple, loc.collect()))
     lh.release()
     rh.release()  # no-op by contract
+
+
+def test_materialize_reliable_evaluates_plan_once(spark):
+    """The reliable freeze computes its plan ONCE without a persist in
+    front: the eager checkpoint's write job is the only evaluation, and
+    reading the frozen rows evaluates nothing again.  A Python UDF
+    after a shuffle over 97 groups counts its calls in an accumulator.
+    """
+    from graphdb_neo4j_spark.operators.order import materialize
+
+    calls = spark.sparkContext.accumulator(0)
+
+    @F.udf("long")
+    def touch(n):
+        calls.add(1)
+        return n
+
+    df = (
+        spark.range(5000)
+        .groupBy((F.col("id") % 97).alias("g"))
+        .agg(F.count("*").alias("n"))
+        .select("g", touch("n").alias("n"))
+    )
+    out, handle = materialize(df, mode="reliable")
+    assert calls.value == 97
+    assert out.count() == 97
+    assert sum(r.n for r in out.collect()) == 5000
+    assert calls.value == 97
+    handle.release()
+
+
+def test_freezes_go_through_materialize_only():
+    """Source guard: outside ``operators/order.py`` the package freezes
+    only through ``order.materialize`` — no raw ``localCheckpoint(`` /
+    ``.checkpoint(`` call, no Louvain freeze switch, and none of the
+    retired freeze helpers or dead helpers defined anywhere."""
+    import ast
+    import pathlib
+
+    import graphdb_neo4j_spark
+
+    retired = {
+        "checkpoint_eager", "partitioned_checkpoint", "partitioned_cache",
+        "_dst_partitioned_cache", "rdd_freeze", "rdd_freeze_counting",
+        "df_freeze", "df_freeze_counting", "_chain_persist",
+        "with_text_stats", "bloom_positions_sql", "lsh_bucket",
+        "_query_signature",
+    }
+    banned = ("localCheckpoint(", ".checkpoint(", "SPARK_GRAFT_LOUVAIN_FREEZE")
+    root = pathlib.Path(graphdb_neo4j_spark.__file__).parent
+    hits, defined = [], []
+    for path in sorted(root.rglob("*.py")):
+        src = path.read_text()
+        rel = path.relative_to(root).as_posix()
+        if rel != "operators/order.py":
+            for no, line in enumerate(src.splitlines(), 1):
+                hits += [f"{rel}:{no}: {b}" for b in banned if b in line]
+        defined += [
+            f"{rel}: {n.name}"
+            for n in ast.walk(ast.parse(src))
+            if isinstance(n, (ast.FunctionDef, ast.ClassDef))
+            and n.name in retired
+        ]
+    assert not hits, hits
+    assert not defined, defined
 
 
 def test_curate_quality_base_scrubs_once_no_join(spark):
@@ -1296,8 +1361,9 @@ def test_curate_unpersists_on_midbuild_exception(spark, monkeypatch):
 
 def test_partitioned_cache_layout_visible_to_joins(spark):
     """r7 regression guard for the Louvain −54%/round fix: a frame laid
-    out with partitioned_cache must expose its hash-partitioning and
-    sort order to downstream plans — the cached side of a key join
+    out with materialize(mode="layout") must expose its
+    hash-partitioning and sort order to downstream plans — the cached
+    side of a key join
     plans NO per-query Exchange and NO Sort between the
     InMemoryTableScan and the join (a checkpointed frame scans as
     UnknownPartitioning and re-exchanges every round, the r5/r6 bug).
@@ -1306,13 +1372,13 @@ def test_partitioned_cache_layout_visible_to_joins(spark):
     not counted — it runs once, not per query."""
     from pyspark.sql import functions as F
 
-    from graphdb_neo4j_spark.operators.traversal import partitioned_cache
+    from graphdb_neo4j_spark.operators.order import materialize
 
     e = spark.range(5000).select(
         (F.col("id") % 97).alias("dst"), (F.col("id") % 53).alias("src"),
         F.lit(1).cast("bigint").alias("w"),
     )
-    und = partitioned_cache(e, "dst")
+    und, handle = materialize(e, mode="layout", key="dst")
     try:
         # checkpoint-scan partner (unknown stats, like the per-round
         # assignment) so the join cannot be planned broadcast-by-stats
@@ -1338,7 +1404,7 @@ def test_partitioned_cache_layout_visible_to_joins(spark):
         between = lines[ji + 1: si]
         assert not any("Sort" in l or "Exchange" in l for l in between), plan
     finally:
-        und.unpersist()
+        handle.release()
 
 
 def test_url_normalize_plan_stays_jvm_side(spark):
@@ -1733,7 +1799,7 @@ def test_q225_phash_dedup_plan(spark):
         encode_png,
         perceptual_hashes,
     )
-    from graphdb_neo4j_spark.operators.order import checkpoint_eager
+    from graphdb_neo4j_spark.operators.order import materialize
 
     rng = np.random.RandomState(7)
     media = spark.createDataFrame(
@@ -1745,7 +1811,7 @@ def test_q225_phash_dedup_plan(spark):
         ],
         "media_id long, payload binary",
     )
-    hashes, h_handle = checkpoint_eager(perceptual_hashes(media))
+    hashes, h_handle = materialize(perceptual_hashes(media))
     pairs, p_handle = hamming_neardup_pairs(
         hashes, id_col="media_id", hash_col="phash", bands=16, max_hamming=10
     )

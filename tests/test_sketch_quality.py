@@ -854,7 +854,7 @@ def test_q225_q226_release_image_checkpoints(spark):
     """r9 verdict item #4, the q209-style release-discipline gate for
     the image flagships: repeated q225/q226 runs must leave only tiny
     result blocks — the hash frame and LSH band explode are released
-    via their handles (checkpoint_eager + hamming_neardup_pairs'
+    via their handles (order.materialize + hamming_neardup_pairs'
     handle), never accumulated across driver/bench loops."""
     from graphdb_neo4j_spark.workloads import QUERY_FNS as Q
 
@@ -874,7 +874,7 @@ def test_hamming_pairs_handle_releases_blocks_and_fails_loud(spark):
     """The ADVICE-r9 handle contract, mechanically: release() drops
     exactly the LSH explode's checkpoint blocks from the store, and a
     post-release action fails loudly instead of silently recomputing
-    (the checkpoint_eager contract)."""
+    (the order.materialize contract)."""
     import pytest as _pytest
 
     from graphdb_neo4j_spark.operators.dedup import hamming_neardup_pairs

@@ -91,6 +91,28 @@ def test_pagerank_sums_and_ranks(spark):
     assert ranks["s2"] == pytest.approx(0.15)
 
 
+def test_reliable_freeze_switch_reaches_kernels(spark, edges_df, monkeypatch):
+    """SPARK_GRAFT_RELIABLE_FREEZE=1 upgrades the kernels' own freezes:
+    the results equal the default run and the returned frame sits on a
+    reliably checkpointed RDD, not a locally checkpointed one."""
+    nodes = spark.createDataFrame(
+        [(k,) for k in ["a", "b", "c", "d", "e", "x", "y", "lonely"]], ["key"]
+    )
+    kernels = [
+        lambda: connected_components(nodes, edges_df),
+        lambda: pagerank(edges_df),
+    ]
+    default = [sorted(map(tuple, k().collect())) for k in kernels]
+    monkeypatch.setenv("SPARK_GRAFT_RELIABLE_FREEZE", "1")
+    for kernel, want in zip(kernels, default):
+        got = kernel()
+        node = got._jdf.queryExecution().analyzed()
+        assert node.nodeName() == "LogicalRDD"
+        assert not node.rdd().isLocallyCheckpointed()
+        assert node.rdd().getCheckpointFile().isDefined()
+        assert sorted(map(tuple, got.collect())) == want
+
+
 def test_triangle_count(spark):
     from graphdb_neo4j_spark.operators.traversal import triangle_count
 
